@@ -88,17 +88,6 @@ object Bench {
       .getOperatingSystemMXBean.getSystemLoadAverage
     catch { case _: Throwable => -1.0 }
 
-  /** Configured master parallelism (VERDICT r19 item 3): the artifact's
-    * `cpus` previously reported availableProcessors(), which LIES under
-    * a reduced-core `local[N]` run (the driver's 8-core scaling run was
-    * stamped 32) and mis-fires the load-adjudication rule. `cpus` now
-    * records what the session actually runs with ($SPARK_GRAFT_CPUS,
-    * the LocalSpark master width); the host's processor count moves to
-    * `host_procs` alongside. */
-  private def configuredCpus(): Int =
-    try sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").trim.toInt
-    catch { case _: Throwable => Runtime.getRuntime.availableProcessors() }
-
   def main(args: Array[String]): Unit = {
     val t0 = System.nanoTime()
     val wallEpochStart = System.currentTimeMillis() / 1000L
@@ -112,6 +101,12 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val spark = LocalSpark.session(aqe = Some(true))
+    // `cpus` stamp (VERDICT r19 item 3): the live session's master
+    // width, so it cannot drift from the session LocalSpark built;
+    // availableProcessors() lies under a reduced-core `local[N]` run and
+    // mis-fires the load-adjudication rule, so the host's processor
+    // count rides alongside as `host_procs` only
+    val cpus = spark.sparkContext.defaultParallelism
     // Known-benign WARN spam (cap-gated unpartitioned windows, judged
     // expected noise in VERDICT r16; join-hint notes) flooded the
     // round-16 stdout tail past the driver's bounded capture and
@@ -203,7 +198,7 @@ object Bench {
         if (sinceCheckpoint >= 60) {
           sinceCheckpoint = 0
           emit(p1.map { case (n, tt, okk) => (n, (tt, okk)) }.toSeq,
-            Nil, memoFed, only, sfDir, firstPass = p1.map(_._2).sum,
+            Nil, memoFed, only, sfDir, cpus, firstPass = p1.map(_._2).sum,
             repassed = 0, budget = budget, partial = true, mirror = false,
             loadStart = loadStart, epochStart = wallEpochStart, tOff = tOff,
             compactOnly = true)
@@ -215,7 +210,7 @@ object Bench {
     // best-so-far per entry; re-sampling lowers these in place
     val best = scala.collection.mutable.LinkedHashMap[String, (Double, Boolean)]()
     p1.foreach { case (n, t, ok) => best(n) = (t, ok) }
-    emit(best.toSeq, skipped.toSeq, memoFed, only, sfDir,
+    emit(best.toSeq, skipped.toSeq, memoFed, only, sfDir, cpus,
       firstPass = p1.map(_._2).sum, repassed = 0, budget = budget,
       partial = true, mirror = false,
       loadStart = loadStart, loadP1 = loadP1End, epochStart = wallEpochStart,
@@ -269,16 +264,15 @@ object Bench {
     }
 
     val finalCompact =
-      emit(best.toSeq, skipped.toSeq, memoFed, only, sfDir,
+      emit(best.toSeq, skipped.toSeq, memoFed, only, sfDir, cpus,
         firstPass = p1.map(_._2).sum, repassed = repassed, budget = budget,
         partial = skipped.nonEmpty, mirror = true,
         loadStart = loadStart, loadP1 = loadP1End, epochStart = wallEpochStart,
         tOff = tOff)
-    spark.stop()
     // re-print the compact line AFTER session shutdown so it is the
-    // process's final stdout line even if stop() logs anything — the
+    // process's final stdout line even if stop() logs or throws — the
     // driver's tail parser reads bottom-up (VERDICT r19 item 2)
-    println(finalCompact)
+    try spark.stop() finally println(finalCompact)
   }
 
   /** Print the full per-query JSON line + the bounded compact summary
@@ -288,7 +282,7 @@ object Bench {
     * mirror=true, also write the artifact files (see class doc). */
   private def emit(results: Seq[(String, (Double, Boolean))],
                    skipped: Seq[String], memoFed: Seq[String],
-                   only: Option[Set[String]], sfDir: String,
+                   only: Option[Set[String]], sfDir: String, cpus: Int,
                    firstPass: Double, repassed: Int, budget: Double,
                    partial: Boolean, mirror: Boolean,
                    loadStart: Double = -1.0, loadP1: Double = -1.0,
@@ -303,7 +297,7 @@ object Bench {
       .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
     val loadJson = s""""load_avg":{"start":${f2(loadStart)},""" +
       s""""p1_end":${f2(loadP1)},"now":${f2(loadAvg())}},""" +
-      s""""wall_epoch_start":$epochStart,"cpus":${configuredCpus()},""" +
+      s""""wall_epoch_start":$epochStart,"cpus":$cpus,""" +
       s""""host_procs":${Runtime.getRuntime.availableProcessors()}"""
     val failed = results.filter(!_._2._2).map(_._1)
     // failures are machine-visible: a broken query must not silently

@@ -74,20 +74,11 @@ object SparkEntry extends RegistryConduit with RegistryAnalytics
 
   /** JVM-exit cleanup for the per-process serve artifacts above (the
     * quantizer save and the z-ordered layout + index): they live in
-    * fresh `Files.createTempDirectory` paths, so without this hook
-    * every harness process leaks a parquet layout copy of orders into
-    * tmp — the maintenance pass a real deployment schedules. Allocate
-    * temp dirs through this so each registers exactly once. */
-  private[graft] def scratchDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }
-    p.toString
-  }
+    * fresh temp dirs ([[Scratch.dir]]), so without the exit hook every
+    * harness process leaks a parquet layout copy of orders into tmp —
+    * the maintenance pass a real deployment schedules. */
+  private[graft] def scratchDir(prefix: String): String =
+    Scratch.dir(prefix).toString
 
   /** Transient per-query scratch (round 17): the stream replays and
     * index-build parities allocate src/store/out/ckpt dirs whose
@@ -114,11 +105,8 @@ object SparkEntry extends RegistryConduit with RegistryAnalytics
     * Safe mid-run by the transient contract: callers drain only at
     * query boundaries, after the query's result has materialized. */
   def drainTransientScratch(): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
     var p = transientScratch.poll()
-    while (p != null) { rm(p.toFile); p = transientScratch.poll() }
+    while (p != null) { Scratch.rm(p.toFile); p = transientScratch.poll() }
   }
 
   /** Session-scoped memo of the capped near-dup PAIR relation (threshold

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import java.nio.file.Files
 
 /** A12-A16, A18 — the reference's sink-side machinery re-expressed as
   * declarative, oracle-checkable operators plus a real partitioned write.
@@ -49,16 +48,8 @@ object SinkOps {
   /** One scratch root per JVM for sink round-trips, removed on exit —
     * repeated bench/verify invocations overwrite the same subdirectory
     * instead of leaking a fresh temp dir per call. */
-  private[graft] lazy val scratchRoot: java.nio.file.Path = {
-    val p = Files.createTempDirectory("graft_sink_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }))
-    p
-  }
+  private[graft] lazy val scratchRoot: java.nio.file.Path =
+    graft.Scratch.dir("graft_sink_")
 
   /** A14 sink_txn_batch — the real partitioned, committed write: route
     * events by sentinel-normalized event_type, write

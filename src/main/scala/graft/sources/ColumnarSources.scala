@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import java.nio.file.Files
 
 /** Columnar-format round-trips beyond parquet — the lake's second
   * first-class format. The reference conduit's default sink is ORC
@@ -12,16 +11,8 @@ import java.nio.file.Files
   * path a flat smoke test misses. */
 object ColumnarSources {
 
-  private lazy val scratchRoot: java.nio.file.Path = {
-    val p = Files.createTempDirectory("graft_columnar_")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }
-    p
-  }
+  private lazy val scratchRoot: java.nio.file.Path =
+    graft.Scratch.dir("graft_columnar_")
 
   /** ORC ROUND-TRIP WITH A NESTED STRUCT (round 14) — write the event
     * relation as ORC with the (user, value) pair nested under a struct

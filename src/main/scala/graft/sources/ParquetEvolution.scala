@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import java.nio.file.Files
 
 /** Parquet SCHEMA EVOLUTION round-trip — the third lake-ingest contract
   * next to the text-source quarantines: a long-lived table accretes
@@ -24,16 +23,8 @@ import java.nio.file.Files
   * NULL breaks a count or a sum. */
 object ParquetEvolution {
 
-  private lazy val scratchRoot: java.nio.file.Path = {
-    val p = Files.createTempDirectory("graft_evolve_")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }
-    p
-  }
+  private lazy val scratchRoot: java.nio.file.Path =
+    graft.Scratch.dir("graft_evolve_")
 
   /** Generation-2 derived column: exact decimal double of the value,
     * surfaced as double (deterministic in any engine). */

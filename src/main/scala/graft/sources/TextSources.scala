@@ -45,16 +45,8 @@ object TextSources {
 
   /** Per-JVM scratch root (mirrors SinkOps): overwritten per call,
     * removed on JVM exit. */
-  private lazy val scratchRoot: java.nio.file.Path = {
-    val p = Files.createTempDirectory("graft_sources_")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }
-    p
-  }
+  private lazy val scratchRoot: java.nio.file.Path =
+    graft.Scratch.dir("graft_sources_")
 
   private val readSchema = StructType(Seq(
     StructField("event_id", LongType),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -123,9 +123,8 @@ object StatefulSessions {
     * actually fire. The sentinel user's own session never closes, so
     * it never reaches the output (belt-and-braces filtered anyway).
     *
-    * File arrival order is forced with explicit modification times
-    * (the file source processes oldest-first): real data, then flush A
-    * (+60 s), then flush B (+120 s).
+    * File arrival order is the staged file order ([[Replay]]): real
+    * data in time-range order, then flush A, then flush B.
     *
     * Output: (user_id, sess_start, sess_end, n_events) ordered — the
     * batch `event_sessionize` contract, hash-compared against ITS
@@ -136,79 +135,48 @@ object StatefulSessions {
                              gapMs: Long = 30L * 60L * 1000L,
                              watermark: String = "10 minutes")
       : org.apache.spark.sql.DataFrame = {
-    require(nFiles >= 2, s"need >= 2 files for a multi-batch replay: $nFiles")
     val spark = events.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val ev = events.select(col("user_id"), col("ts"))
-    ev.repartitionByRange(nFiles, col("ts"))
-      .write.mode("overwrite").parquet(srcDir)
-    // the file source processes oldest-mtime-first, and the range write
-    // lands all parts within the same millisecond — ties would arrive
-    // in ARBITRARY order, making earlier-range events late behind the
-    // advanced watermark, and append-mode stateful processing DROPS
-    // late rows (the complete-mode tumbling replay is immune; this one
-    // is not). Pin arrival order to the time ranges: part-NNNNN names
-    // are in range-partition order, so stamp strictly increasing
-    // mtimes along the name sort.
-    val now = System.currentTimeMillis()
-    new java.io.File(srcDir).listFiles()
-      .filter(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet"))
-      .sortBy(_.getName).zipWithIndex
-      .foreach { case (f, i) => f.setLastModified(now + i * 2000L) }
-    val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-    if (maxTs == null) {
-      // empty corpus: no flush instant exists and no session can ever
-      // close — the replay's answer is structurally the empty session
-      // table (the engine-wide empty-input doctrine: empty, not a throw)
-      return Seq.empty[(Long, java.sql.Timestamp, java.sql.Timestamp, Long)]
-        .toDF("user_id", "sess_start", "sess_end", "n_events")
-    }
+    // empty corpus: no flush instant exists and no session can ever
+    // close — the replay's answer is the empty session table
+    val maxTs = Option(ev.agg(max(col("ts"))).head().getTimestamp(0))
     // flush instants: beyond every real timeout (max ts + gap) plus the
     // watermark delay (wm bounds how far the watermark trails max event
-    // time) plus a day of margin
+    // time) plus a day of margin; `zz_` names sort after the data parts
     val dayUs = 86400L * 1000000L
-    def writeFlush(tag: String, us: Long, mtimeOffsetSec: Long): Unit = {
+    def writeFlush(tag: String, us: Long): Unit = {
       val tmp = s"$srcDir/../flush_$tag"
       Seq((-1L, tsOfMicros(us))).toDF("user_id", "ts")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .filter(f => f.getName.startsWith("part-") &&
           f.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(s"$srcDir/zz_flush_$tag.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(System.currentTimeMillis() +
-        mtimeOffsetSec * 1000L)
+      java.nio.file.Files.move(part.toPath,
+        java.nio.file.Paths.get(srcDir, s"zz_flush_$tag.parquet"))
       ()
     }
-    val base = micros(maxTs) + gapMs * 1000L + dayUs
-    writeFlush("a", base, nFiles * 2L + 60L)
-    writeFlush("b", base + dayUs, nFiles * 2L + 120L)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .as[Ev]
-    // state-store partition count is pinned by the FIRST batch's
-    // shuffle-partitions conf for the checkpoint's lifetime; each batch
-    // then pays per-partition state commit + task overhead × batches.
-    // The per-user session state is |users|-scale — the replay pin
-    // holds it comfortably here; a deployment sizes this to its cluster,
-    // and the conf is restored right after the bounded replay
-    ReplayConf.withReplayPartitions(spark) {
-      val q = sessionize(stream, gapMs, watermark)
-        .filter(col("user_id") >= 0L)
-        .writeStream
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[Session], _: Long) =>
-            b.write.mode("append").parquet(outDir); ()
-        }.start()
-      q.awaitTermination()
+    // time-ranged parts in range order, then flush A, then flush B: an
+    // out-of-order range would put earlier events late behind the
+    // advanced watermark, and append-mode stateful processing DROPS
+    // late rows (the complete-mode tumbling replay is immune; this one
+    // is not)
+    val staged = Replay.stageFiles(spark, srcDir, ev.schema, "parquet",
+      nFiles) {
+      ev.repartitionByRange(nFiles, col("ts"))
+        .write.mode("overwrite").parquet(srcDir)
+      maxTs.foreach { t =>
+        val base = micros(t) + gapMs * 1000L + dayUs
+        writeFlush("a", base)
+        writeFlush("b", base + dayUs)
+      }
     }
-    spark.read.parquet(outDir)
+    val sessions = sessionize(staged.stream.as[Ev], gapMs, watermark)
+      .filter(col("user_id") >= 0L).toDF()
+    Replay.drainEach(sessions, checkpointDir, "append") { (b, _) =>
+      b.write.mode("append").parquet(outDir)
+    }
+    Replay.readBack(spark, outDir, sessions.schema)
       .select(col("user_id"), col("sess_start"), col("sess_end"),
         col("n_events"))
       .orderBy(col("user_id"), col("sess_start"))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Streaming CDC latest-wins upsert — the streaming face of
   * `cdc_upsert`: a change stream of versioned rows folded into
@@ -62,18 +62,16 @@ object StreamingCdc {
     * `orders` exactly as the batch `cdc_upsert` key derives it (every
     * row at version 1; keys ≡ 0 mod 7 re-shipped at version 2 with
     * +100.00; keys ≡ 0 mod 97 inserted under a disjoint key space),
-    * laid out so a key's versions SPAN micro-batches
+    * staged so a key's versions SPAN micro-batches
     * (repartitionByRange on (version, key) puts v1 and v2 in different
-    * files), replayed with `maxFilesPerTrigger=1` through
-    * [[latestWins]] in UPDATE mode, each batch's touched keys
-    * committed to `batch_id=N`; the final answer takes each key's row
-    * from its LARGEST batch id. Because the state fold is a max-merge,
-    * NO mtime pinning is needed: any file order converges to the same
-    * final relation — the replay pins exactly that claim against the
+    * files), replayed ([[Replay]]) through [[latestWins]] in UPDATE
+    * mode, each batch's touched keys committed to `batch_id=N`; the
+    * final answer takes each key's row from its LARGEST batch id.
+    * Because the state fold is a max-merge, any file order converges to
+    * the same final relation — the replay pins that claim against the
     * batch latest-wins oracle. */
   def cdcParityReplay(orders: DataFrame, srcDir: String, outDir: String,
                       checkpointDir: String, nFiles: Int = 5): DataFrame = {
-    require(nFiles >= 2, s"need >= 2 files for a multi-batch replay: $nFiles")
     val spark = orders.sparkSession
     val base = orders.select(col("o_orderkey"), col("o_custkey"),
       (col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(12, 2))
@@ -84,37 +82,13 @@ object StreamingCdc {
       .withColumn("version", lit(2L))
     val inserts = base.filter(pmod(col("o_orderkey"), lit(97L)) === 0)
       .withColumn("o_orderkey", col("o_orderkey") + 1000000000L)
-    base.unionByName(updates).unionByName(inserts)
-      .repartitionByRange(nFiles, col("version"), col("o_orderkey"))
-      .write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    ReplayConf.withReplayPartitions(spark) {
-      val q = latestWins(stream).toDF().writeStream
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          b.write.mode("overwrite").parquet(s"$outDir/batch_id=$id"); ()
-        }.start()
-      q.awaitTermination()
-    }
-    val dir = new java.io.File(outDir)
-    if (!dir.exists())
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("o_orderkey",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("version",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("o_custkey",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("price_cents",
-            org.apache.spark.sql.types.LongType))))
+    val staged = Replay.stage(base.unionByName(updates).unionByName(inserts)
+      .repartitionByRange(nFiles, col("version"), col("o_orderkey")),
+      srcDir, nFiles)
+    val winners = latestWins(staged.stream).toDF()
+    Replay.drainEach(winners, checkpointDir, "update")(Replay.commit(outDir))
     // final state per key: the row from its largest committed batch
-    spark.read.parquet(outDir)
+    Replay.readCommits(spark, outDir, winners.schema)
       .groupBy(col("o_orderkey"))
       .agg(max_by(
         struct(col("version"), col("o_custkey"), col("price_cents")),

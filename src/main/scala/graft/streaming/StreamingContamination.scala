@@ -84,33 +84,22 @@ object StreamingContamination {
   def contaminationParityReplay(docs: DataFrame, srcDir: String,
                                 outDir: String, checkpointDir: String,
                                 nFiles: Int = 8, k: Int = 13): DataFrame = {
-    require(nFiles >= 2, s"need >= 2 files for a multi-batch replay: $nFiles")
     val spark = docs.sparkSession
-    import org.apache.spark.sql.streaming.Trigger
     val tagged = docs.withColumn("is_test",
       graft.operators.Corpus.isHoldout(col("doc_id")))
     val bench = benchmarkGrams(tagged.filter(col("is_test")), k)
+    def verdicts(b: DataFrame): DataFrame = gateBatch(b, bench)
+      .select(col("doc_id"), col("n_shared"), col("contaminated"))
     try {
-      tagged.filter(!col("is_test")).select(col("doc_id"), col("text"))
-        .repartitionByRange(nFiles, col("doc_id"))
-        .write.mode("overwrite").parquet(srcDir)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(srcDir).schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      ReplayConf.withReplayPartitions(spark) {
-        val q = stream.writeStream
-          .option("checkpointLocation", checkpointDir)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            gateBatch(b, bench)
-              .select(col("doc_id"), col("n_shared"), col("contaminated"))
-              .write.mode("append").parquet(outDir)
-            ()
-          }.start()
-        q.awaitTermination()
+      val staged = Replay.stage(tagged.filter(!col("is_test"))
+        .select(col("doc_id"), col("text"))
+        .repartitionByRange(nFiles, col("doc_id")), srcDir, nFiles)
+      Replay.drainEach(staged.stream, checkpointDir, "append") { (b, _) =>
+        verdicts(b).write.mode("append").parquet(outDir)
       }
+      Replay.readBack(spark, outDir, verdicts(staged.stream).schema)
+        .orderBy(col("doc_id"))
     } finally bench.close()
-    spark.read.parquet(outDir).orderBy(col("doc_id"))
   }
 
   /** The deployable per-micro-batch gate, for `foreachBatch`: annotate

@@ -85,8 +85,8 @@ object StreamingCorpus {
     * replays' repartitionByRange, batch MEMBERSHIP must be a SQL
     * function of the key here, because the near-dup gate's semantics
     * depend on batch boundaries: cross-batch hits consult the survivor
-    * store, in-batch hits chain greedily), pin arrival order with
-    * strictly increasing mtimes (oldest-first file source), and run the
+    * store, in-batch hits chain greedily), stage them in class order
+    * ([[Replay]]: batch i reads file i), and run the
     * production [[ingest]] — quality gate, stream-static
     * decontamination vs the holdout's 13-gram set, banded-MinHash
     * near-dup gate with the cross-batch store — over the replay.
@@ -110,7 +110,6 @@ object StreamingCorpus {
                          outDir: String, checkpointDir: String,
                          nFiles: Int = 4,
                          horizonSec: Long = 10000000000L): DataFrame = {
-    require(nFiles >= 2, s"need >= 2 files for a multi-batch replay: $nFiles")
     val spark = docs.sparkSession
     val tagged = docs.withColumn("is_test",
       graft.operators.Corpus.isHoldout(col("doc_id")))
@@ -120,67 +119,40 @@ object StreamingCorpus {
       val train = tagged.filter(!col("is_test"))
         .select(col("doc_id"), timestamp_seconds(col("doc_id")).as("ts"),
           col("text"))
-      new java.io.File(srcDir).mkdirs()
-      val now = System.currentTimeMillis()
-      // stage all batch files in ONE corpus pass: partitionBy(b) lands
-      // each residue class as its own directory (repartition on b →
-      // one part file per class), then each class's file moves into
-      // srcDir under a pinned, strictly increasing mtime
-      val stage = s"$srcDir/../stage"
-      train.withColumn("b", pmod(col("doc_id"), lit(nFiles.toLong)))
-        .repartition(col("b"))
-        .write.mode("overwrite").partitionBy("b").parquet(stage)
-      for (i <- 0 until nFiles) {
-        val cls = new java.io.File(s"$stage/b=$i")
-        val dst = new java.io.File(s"$srcDir/b$i.parquet")
-        val part = if (cls.exists())
-          cls.listFiles().filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).headOption
-        else None
-        part match {
-          case Some(p) => java.nio.file.Files.move(p.toPath, dst.toPath); ()
-          case None => // empty residue class: an empty batch file keeps
-            // the file→batch numbering aligned with the oracle's fold
-            train.filter(pmod(col("doc_id"), lit(nFiles.toLong)) === i)
-              .coalesce(1).write.mode("overwrite").parquet(s"$stage/e$i")
-            val p = new java.io.File(s"$stage/e$i").listFiles()
-              .filter(f => f.getName.startsWith("part-") &&
-                f.getName.endsWith(".parquet")).head
-            java.nio.file.Files.move(p.toPath, dst.toPath); ()
+      def partFile(dir: String): java.io.File =
+        new java.io.File(dir).listFiles().filter(f =>
+          f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+      val staged = Replay.stageFiles(spark, srcDir, train.schema, "parquet",
+        nFiles) {
+        // all batch files in ONE corpus pass: partitionBy(b) lands each
+        // residue class as its own directory (repartition on b → one
+        // part file per class); each class's file then moves into
+        // srcDir under a name that sorts in class order
+        val stage = s"$srcDir/../stage"
+        train.withColumn("b", pmod(col("doc_id"), lit(nFiles.toLong)))
+          .repartition(col("b"))
+          .write.mode("overwrite").partitionBy("b").parquet(stage)
+        new java.io.File(srcDir).mkdirs()
+        for (i <- 0 until nFiles) {
+          val cls = s"$stage/b=$i"
+          if (!new java.io.File(cls).exists())
+            // empty residue class: an empty batch file keeps the
+            // file→batch numbering aligned with the oracle's fold
+            train.limit(0).coalesce(1).write.mode("overwrite").parquet(cls)
+          java.nio.file.Files.move(partFile(cls).toPath,
+            java.nio.file.Paths.get(srcDir, f"b$i%05d.parquet"))
         }
-        dst.setLastModified(now + i * 2000L)
       }
-      val stream = spark.readStream
-        .schema(spark.read.parquet(srcDir).schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      // batch state is document-table scale — the replay pin cuts the
-      // per-micro-batch task overhead (the exactParityReplay pinning
-      // note); restored right after the bounded replay
-      ReplayConf.withReplayPartitions(spark) {
-        val q = ingest(stream, bench, storeDir, outDir, checkpointDir,
-          minQuality = 0.5, threshold = 0.5,
-          horizonSec = horizonSec)
-        q.awaitTermination()
+      Replay.drain(spark) {
+        ingest(staged.stream, bench, storeDir, outDir, checkpointDir,
+          minQuality = 0.5, threshold = 0.5, horizonSec = horizonSec)
       }
-    } finally bench.close()
-    val out = new java.io.File(outDir)
-    if (!out.exists())
-      // empty train split: every micro-batch is empty, no commit ever
-      // materializes outDir — the structural answer is the empty table
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("batch_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_chars",
-            org.apache.spark.sql.types.LongType))))
-    else
-      spark.read.parquet(outDir)
-        .select(col("doc_id"), col("batch_id").cast("long").as("batch_id"),
+      // an empty train split commits nothing: every micro-batch is empty
+      Replay.readCommits(spark, outDir, staged.stream.schema)
+        .select(col("doc_id"), col("batch_id"),
           length(col("text")).cast("long").as("n_chars"))
         .orderBy(col("doc_id"))
+    } finally bench.close()
   }
 
   /** COMPACTING replay (round 14) — [[corpusParityReplay]] with the

@@ -49,11 +49,11 @@ object StreamingDedup {
   /** END-TO-END streaming-dedup parity replay (round 12) — the
     * `dropDuplicates` state store under the driver's full oracle,
     * sibling of `StreamingWindows.tumblingParityReplay`: the batch
-    * `documents` relation is laid out as `nFiles` doc_id-ranged parquet
-    * files (exact duplicates are scattered across the id space, so
+    * `documents` relation is staged as `nFiles` doc_id-ranged files
+    * (exact duplicates are scattered across the id space, so
     * duplicate groups SPAN micro-batches — the cross-batch suppression
-    * is what this replay exists to prove), replayed with
-    * `maxFilesPerTrigger=1` through [[exactGlobal]] on the content hash,
+    * is what this replay exists to prove), replayed ([[Replay]])
+    * through [[exactGlobal]] on the content hash,
     * each append batch committed to its own `batch_id=N` directory, and
     * the union of the commits returned for the hash-compare against
     * `SELECT DISTINCT md5(text), length(text)`.
@@ -72,44 +72,17 @@ object StreamingDedup {
     * variant is the unbounded-corpus path, exercised by the specs). */
   def exactParityReplay(docs: DataFrame, srcDir: String, outDir: String,
                         checkpointDir: String, nFiles: Int = 5): DataFrame = {
-    require(nFiles >= 2, s"need >= 2 files for a multi-batch replay: $nFiles")
     val spark = docs.sparkSession
-    docs.select(col("doc_id"), col("text"))
-      .repartitionByRange(nFiles, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val keyed = stream.select(
+    val staged = Replay.stage(docs.select(col("doc_id"), col("text"))
+      .repartitionByRange(nFiles, col("doc_id")), srcDir, nFiles)
+    val keyed = staged.stream.select(
       md5(col("text")).as("h"),
       length(col("text")).as("n_chars"))
-    // distinct-hash state is small — the replay pin holds it; conf
-    // restored after the bounded replay (state-partition pinning note
-    // in the sessionize replay)
-    ReplayConf.withReplayPartitions(spark) {
-      val q = exactGlobal(keyed, Seq("h")).writeStream
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          b.write.mode("overwrite").parquet(s"$outDir/batch_id=$id"); ()
-        }.start()
-      q.awaitTermination()
-    }
-    // empty corpus: zero batches commit, outDir never materializes —
-    // the structural answer is the empty distinct-key table
-    val out = new java.io.File(outDir)
-    if (!out.exists())
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("h",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n_chars",
-            org.apache.spark.sql.types.IntegerType))))
-    else
-      spark.read.parquet(outDir).select(col("h"), col("n_chars"))
-        .orderBy(col("h"))
+    val distinct = exactGlobal(keyed, Seq("h"))
+    Replay.drainEach(distinct, checkpointDir, "append")(Replay.commit(outDir))
+    Replay.readBack(spark, outDir, distinct.schema)
+      .select(col("h"), col("n_chars"))
+      .orderBy(col("h"))
   }
 
   /** Streaming NEAR-dup dedup — the MinHash-LSH front gate for a

@@ -23,8 +23,8 @@ object StreamingEnrich {
   /** END-TO-END stream-static-join parity replay (round 12) — the
     * fifth streaming module under the driver's full oracle, and the
     * STATELESS counterpart of the window/session/dedup replays: the
-    * orders relation is laid out as `nFiles` o_orderkey-ranged parquet
-    * files, replayed with `maxFilesPerTrigger=1`, and every micro-batch
+    * orders relation is staged as `nFiles` o_orderkey-ranged files,
+    * replayed ([[Replay]]), and every micro-batch
     * flows through ONE [[enrich]] call against the pre-joined
     * customer⋈nation⋈region dimension snapshot — the deployed
     * stream-static shape (broadcast dim, streaming side never
@@ -42,14 +42,9 @@ object StreamingEnrich {
                          srcDir: String, outDir: String,
                          checkpointDir: String,
                          nFiles: Int = 5): DataFrame = {
-    require(nFiles >= 2, s"need >= 2 files for a multi-batch replay: $nFiles")
     val spark = orders.sparkSession
-    import org.apache.spark.sql.streaming.Trigger
-    orders.repartitionByRange(nFiles, col("o_orderkey"))
-      .write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+    val staged = Replay.stage(orders.repartitionByRange(nFiles,
+      col("o_orderkey")), srcDir, nFiles)
     // the dim snapshot: the same broadcast star join the batch
     // operator builds (Relational.enrichOrders), keyed for enrich()
     val dims = customer
@@ -58,28 +53,13 @@ object StreamingEnrich {
       .select(col("c_custkey").as("o_custkey"), col("c_name"),
         col("c_mktsegment"), col("n_name").as("nation"),
         col("r_name").as("region"))
-    val out = enrich(stream, dims, "o_custkey")
+    val out = enrich(staged.stream, dims, "o_custkey")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"), col("c_name"), col("c_mktsegment"),
         col("nation"), col("region"))
-    ReplayConf.withReplayPartitions(spark) {
-      val q = out.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          b.write.mode("overwrite").parquet(s"$outDir/batch_id=$id"); ()
-        }.start()
-      q.awaitTermination()
-    }
-    val dir = new java.io.File(outDir)
-    if (!dir.exists())
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        out.schema)
-    else
-      spark.read.parquet(outDir)
-        .select(out.columns.map(col): _*)
-        .orderBy(col("o_orderkey"))
+    Replay.drainEach(out, checkpointDir, "append")(Replay.commit(outDir))
+    Replay.readBack(spark, outDir, out.schema)
+      .select(out.columns.map(col): _*)
+      .orderBy(col("o_orderkey"))
   }
 }

@@ -52,56 +52,23 @@ object StreamingExport {
   /** END-TO-END export-conduit parity replay (round 12) — the NINTH
     * streaming module under the driver's full oracle, and the one that
     * IS the reference's whole reason to exist: the events relation
-    * laid out as `nFiles` time-ranged parquet files, replayed with
-    * `maxFilesPerTrigger=1` through the production [[exportStream]]
-    * path (observed metrics + route + exactly-once per-batch
-    * partitioned commits), then ALL landed batches read back and
-    * summarized with the batch sink's own fidelity reduction — sharing
-    * `sink_txn_batch`'s oracle verbatim. What the key pins: every
-    * event routed EXACTLY ONCE across the batch commits (a double
-    * commit or a dropped batch breaks the counts), and the payload
-    * encoding identical to the batch path byte-for-byte (min payload
-    * per partition is arrival-order-independent).
+    * staged as `nFiles` time-ranged files ([[Replay]]), replayed
+    * through the production [[exportStream]] path (observed metrics +
+    * route + exactly-once per-batch partitioned commits), then ALL
+    * landed batches read back and summarized with the batch sink's own
+    * fidelity reduction — sharing `sink_txn_batch`'s oracle verbatim.
+    * What the key pins: every event routed EXACTLY ONCE across the
+    * batch commits (a double commit or a dropped batch breaks the
+    * counts), and the payload encoding identical to the batch path
+    * byte-for-byte (min payload per partition is
+    * arrival-order-independent).
     *
     * Scale shape: the replay is the production conduit plan; the split
     * is one bounded repartitionByRange write. */
   def exportParityReplay(events: DataFrame, srcDir: String,
                          outDir: String, checkpointDir: String,
-                         nFiles: Int = 5): DataFrame = {
-    require(nFiles >= 2, s"need >= 2 files for a multi-batch replay: $nFiles")
-    val spark = events.sparkSession
-    events.repartitionByRange(nFiles, col("ts"))
-      .write.mode("overwrite").parquet(srcDir)
-    // schema from the frame we just wrote — an EMPTY corpus writes no
-    // footer-bearing part files, and schema inference over zero files
-    // throws (the txnBatchRoundTrip lesson, both read sites)
-    val stream = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    ReplayConf.withReplayPartitions(spark) {
-      val q = exportStream(stream, Seq("event_type"), outDir, checkpointDir)
-      q.awaitTermination()
-    }
-    val dir = new java.io.File(outDir)
-    val landedSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("payload_json",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType)))
-    val landed =
-      if (!dir.exists())
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          landedSchema)
-      else
-        // explicit schema: an empty committed batch leaves a dir with
-        // only _SUCCESS, and inference over zero files throws
-        spark.read.schema(landedSchema).parquet(outDir)
-    landed
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_rows"),
-        min(col("payload_json")).as("first_payload"))
-      .orderBy(col("event_type"))
-  }
+                         nFiles: Int = 5): DataFrame =
+    replayExport(events, srcDir, outDir, checkpointDir, nFiles, None)
 
   /** EXACTLY-ONCE-UNDER-REPLAY replay (round 15, VERDICT r14 item 4) —
     * [[exportParityReplay]] with a FORCED batch redelivery injected:
@@ -114,12 +81,9 @@ object StreamingExport {
     * hash-match the no-failure run — which is precisely what the
     * shared oracle pins: idempotent per-batch_id overwrite turns
     * redelivery into a no-op, the semantics upgrade over the
-    * reference's duplicated blocks.
-    *
-    * The file → batch mapping is made deterministic the standard way
-    * (one time-ranged file per batch, strictly increasing pinned
-    * mtimes — the corpusParityReplay protocol), so "replay batch N"
-    * is well-defined: re-read file N, route, commit as batch N.
+    * reference's duplicated blocks. The staged files are in batch
+    * order, so "replay batch N" is well-defined: re-read file N, route,
+    * commit as batch N.
     *
     * Output: the [[exportParityReplay]] summary (event_type, n_rows,
     * first_payload) — n_rows counts a doubly-delivered batch once or
@@ -128,50 +92,32 @@ object StreamingExport {
                               outDir: String, checkpointDir: String,
                               nFiles: Int = 5,
                               replayBatch: Long = 1L): DataFrame = {
-    require(nFiles >= 2, s"need >= 2 files for a multi-batch replay: $nFiles")
     require(replayBatch >= 0L && replayBatch < nFiles,
       s"replayBatch must name one of the $nFiles batches: $replayBatch")
+    replayExport(events, srcDir, outDir, checkpointDir, nFiles,
+      Some(replayBatch))
+  }
+
+  private def replayExport(events: DataFrame, srcDir: String,
+                           outDir: String, checkpointDir: String,
+                           nFiles: Int,
+                           redeliver: Option[Long]): DataFrame = {
     val spark = events.sparkSession
-    events.repartitionByRange(nFiles, col("ts"))
-      .write.mode("overwrite").parquet(srcDir)
-    // pin arrival order: part files sort by name in range order; give
-    // them strictly increasing mtimes so the file source's (mtime,
-    // path) order makes batch i read file i
-    val parts = new java.io.File(srcDir).listFiles()
-      .filter(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet")).sortBy(_.getName)
-    val now = System.currentTimeMillis()
-    parts.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(now + i * 2000L); ()
+    val staged = Replay.stage(events.repartitionByRange(nFiles, col("ts")),
+      srcDir, nFiles)
+    Replay.drain(spark) {
+      exportStream(staged.stream, Seq("event_type"), outDir, checkpointDir)
     }
-    val stream = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    ReplayConf.withReplayPartitions(spark) {
-      val q = exportStream(stream, Seq("event_type"), outDir, checkpointDir)
-      q.awaitTermination()
-    }
-    // inject the duplicate delivery: batch `replayBatch`'s body re-runs
-    // from its original input — at-least-once made visible
-    if (parts.nonEmpty && replayBatch < parts.length) {
+    // the duplicate delivery: batch N's body re-runs from its original
+    // input file — at-least-once made visible
+    redeliver.filter(_ < staged.files.length).foreach { n =>
       val redelivered = spark.read.schema(events.schema)
-        .parquet(parts(replayBatch.toInt).getPath)
+        .parquet(staged.files(n.toInt).getPath)
       writeBatch(ExportPipeline.route(redelivered, Seq("event_type")),
-        outDir, replayBatch)
+        outDir, n)
     }
-    val dir = new java.io.File(outDir)
-    val landedSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("payload_json",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType)))
-    val landed =
-      if (!dir.exists())
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          landedSchema)
-      else
-        spark.read.schema(landedSchema).parquet(outDir)
-    landed
+    val routed = ExportPipeline.route(staged.stream, Seq("event_type"))
+    Replay.readBack(spark, outDir, routed.schema)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_rows"),
         min(col("payload_json")).as("first_payload"))

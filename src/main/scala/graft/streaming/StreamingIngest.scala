@@ -73,7 +73,7 @@ object StreamingIngest {
     * the landing-gate loop: the events relation is written to the SAME
     * JSONL wire as the batch round-trip (`nFiles` part files plus the
     * shared `TextSources.MalformedJsonl` tail file), replayed as a
-    * text file stream with `maxFilesPerTrigger=1` through
+    * text file stream ([[Replay]]) through
     * [[parseJsonLines]], each append batch landed to `batch_id=N`, and
     * the union summarized with the SAME fidelity reduction the batch
     * key uses — so the key shares `source_jsonl_quarantine`'s oracle
@@ -90,36 +90,24 @@ object StreamingIngest {
   def ingestParityReplay(events: DataFrame, srcDir: String,
                          outDir: String, checkpointDir: String,
                          nFiles: Int = 4): DataFrame = {
-    require(nFiles >= 2, s"need >= 2 files for a multi-batch replay: $nFiles")
     val spark = events.sparkSession
-    import org.apache.spark.sql.streaming.Trigger
-    events.select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"))
-      .repartition(nFiles)
-      .write.mode("overwrite").format("json").save(srcDir)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(srcDir, "zz_malformed.json"),
-      (graft.sources.TextSources.MalformedJsonl.mkString("\n") + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val lines = spark.readStream
-      .option("maxFilesPerTrigger", 1).text(srcDir)
-      .select(col("value").as("line"))
-    val parsed = parseJsonLines(lines)
+    // the wire parts, then the `zz_` malformed tail last
+    val staged = Replay.stageFiles(spark, srcDir,
+      StructType(Seq(StructField("value", StringType))), "text", nFiles) {
+      events.select(col("event_id"), col("user_id"), col("event_type"),
+          col("value"))
+        .repartition(nFiles)
+        .write.mode("overwrite").format("json").save(srcDir)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(srcDir, "zz_malformed.json"),
+        (graft.sources.TextSources.MalformedJsonl.mkString("\n") + "\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+    val parsed = parseJsonLines(staged.stream.select(col("value").as("line")))
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("_corrupt"))
-    ReplayConf.withReplayPartitions(spark) {
-      val q = parsed.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          b.write.mode("overwrite").parquet(s"$outDir/batch_id=$id"); ()
-        }.start()
-      q.awaitTermination()
-    }
-    summarizeBatch(
-      spark.read.parquet(outDir)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), col("_corrupt")))
+    Replay.drainEach(parsed, checkpointDir, "append")(Replay.commit(outDir))
+    summarizeBatch(Replay.readBack(spark, outDir, parsed.schema)
+      .select(parsed.columns.map(col): _*))
   }
 }

@@ -48,12 +48,9 @@ object StreamingJoin {
   /** END-TO-END stream-stream-join parity replay (round 12) — the
     * sixth streaming module under the driver's full oracle, and the
     * one with TWO-SIDED state: click and purchase legs of the events
-    * corpus each laid out as `nFiles` time-ranged parquet files with
-    * PINNED mtime order (the file source processes oldest-mtime-first;
-    * the range write lands all parts in the same millisecond, and
-    * out-of-order arrival would put early rows late behind the
-    * advanced watermark — the sessionize replay's discovery, applied
-    * to both sides), replayed with `maxFilesPerTrigger=1` through
+    * corpus each staged as `nFiles` time-ranged files in range order
+    * ([[Replay]] — out-of-order arrival would put early rows late
+    * behind the advanced watermark, on either side), replayed through
     * [[interval]]. Cross-batch proof: a click in batch 2 matches a
     * purchase in batch 6 only if the join STATE carried it — and inner
     * stream-stream joins emit every on-time match with no end-of-stream
@@ -68,54 +65,19 @@ object StreamingJoin {
                            outDir: String, checkpointDir: String,
                            nFiles: Int = 5, upperSec: Long = 3600L,
                            watermark: String = "10 minutes"): DataFrame = {
-    require(nFiles >= 2, s"need >= 2 files for a multi-batch replay: $nFiles")
     val spark = events.sparkSession
-    import org.apache.spark.sql.streaming.Trigger
-    def layOut(tag: String, side: DataFrame): String = {
-      val dir = s"$srcDir/$tag"
-      side.repartitionByRange(nFiles, col("ts"))
-        .write.mode("overwrite").parquet(dir)
-      val now = System.currentTimeMillis()
-      new java.io.File(dir).listFiles()
-        .filter(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .sortBy(_.getName).zipWithIndex
-        .foreach { case (f, i) => f.setLastModified(now + i * 2000L) }
-      dir
-    }
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("event_id"))
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("event_id"))
-    val lDir = layOut("l", clicks)
-    val rDir = layOut("r", purchases)
-    def streamOf(dir: String): DataFrame = {
-      val schema = spark.read.parquet(dir).schema
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-    }
-    val joined = interval(streamOf(lDir), streamOf(rDir), "user_id",
-        lowerSec = 0L, upperSec = upperSec, watermark = watermark)
+    def side(tag: String, eventType: String): DataFrame =
+      Replay.stage(events.filter(col("event_type") === eventType)
+        .select(col("user_id"), col("ts"), col("event_id"))
+        .repartitionByRange(nFiles, col("ts")), s"$srcDir/$tag", nFiles)
+        .stream
+    val joined = interval(side("l", "click"), side("r", "purchase"),
+        "user_id", lowerSec = 0L, upperSec = upperSec, watermark = watermark)
       .select(col("user_id"), col("l_ts"), col("l_event_id"),
         col("r_ts"), col("r_event_id"))
-    ReplayConf.withReplayPartitions(spark) {
-      val q = joined.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          b.write.mode("overwrite").parquet(s"$outDir/batch_id=$id"); ()
-        }.start()
-      q.awaitTermination()
-    }
-    val dir = new java.io.File(outDir)
-    if (!dir.exists())
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        joined.schema)
-    else
-      spark.read.parquet(outDir)
-        .select(joined.columns.map(col): _*)
-        .orderBy(col("user_id"), col("l_event_id"), col("r_event_id"))
+    Replay.drainEach(joined, checkpointDir, "append")(Replay.commit(outDir))
+    Replay.readBack(spark, outDir, joined.schema)
+      .select(joined.columns.map(col): _*)
+      .orderBy(col("user_id"), col("l_event_id"), col("r_event_id"))
   }
 }

@@ -83,10 +83,10 @@ object StreamingSketches {
   }
 
   /** END-TO-END sketch-state parity replay (round 12) — the EIGHTH
-    * streaming module under the driver's full oracle: events laid out
-    * as `nFiles` user_id-ranged parquet files (members of one type are
+    * streaming module under the driver's full oracle: events staged
+    * as `nFiles` user_id-ranged files (members of one type are
     * scattered across the id space, so every sketch accumulates across
-    * micro-batches), replayed with `maxFilesPerTrigger=1` through
+    * micro-batches), replayed ([[Replay]]) through
     * [[kmvPerType]] in UPDATE mode, each batch's re-emitted groups
     * committed to `batch_id=N`; the final answer takes each scope's row
     * from its LARGEST batch id — the last state the sketch reached —
@@ -102,41 +102,14 @@ object StreamingSketches {
   def kmvParityReplay(events: DataFrame, srcDir: String, outDir: String,
                       checkpointDir: String, nFiles: Int = 5,
                       k: Int = 64): DataFrame = {
-    require(nFiles >= 2, s"need >= 2 files for a multi-batch replay: $nFiles")
     val spark = events.sparkSession
-    import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.functions._
-    events.select(col("event_type"), col("user_id"))
-      .repartitionByRange(nFiles, col("user_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    ReplayConf.withReplayPartitions(spark) {
-      val q = kmvPerType(stream, k).toDF().writeStream
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          b.write.mode("overwrite").parquet(s"$outDir/batch_id=$id"); ()
-        }.start()
-      q.awaitTermination()
-    }
-    val dir = new java.io.File(outDir)
-    if (!dir.exists())
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("scope",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n_retained",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("kth_hash",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("est",
-            org.apache.spark.sql.types.DoubleType))))
+    val staged = Replay.stage(events.select(col("event_type"), col("user_id"))
+      .repartitionByRange(nFiles, col("user_id")), srcDir, nFiles)
+    val updates = kmvPerType(staged.stream, k).toDF()
+    Replay.drainEach(updates, checkpointDir, "update")(Replay.commit(outDir))
     // last state per scope: the row from its largest committed batch
-    spark.read.parquet(outDir)
+    Replay.readCommits(spark, outDir, updates.schema)
       .groupBy(col("scope"))
       .agg(max_by(
         struct(col("n_retained"), col("kth_hash"), col("est")),

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 
 /** Streaming face of Sessionize.tumbling — watermarked tumbling-window
@@ -48,9 +47,9 @@ object StreamingWindows {
 
   /** END-TO-END streaming parity replay (round 12) — the proof that the
     * streaming path computes the SAME answer as the batch engine, under
-    * the driver's own oracle: the batch `events` relation is laid out
-    * as `nFiles` time-ranged parquet files, replayed as a genuine
-    * multi-micro-batch file stream (`maxFilesPerTrigger=1`, so the
+    * the driver's own oracle: the batch `events` relation is staged
+    * as `nFiles` time-ranged files, replayed as a genuine
+    * multi-micro-batch file stream ([[Replay]], so the
     * tumbling aggregation's state really accumulates ACROSS batches —
     * one batch would prove nothing about streaming state), run through
     * [[tumbling]], and the final materialized result is returned for
@@ -76,30 +75,17 @@ object StreamingWindows {
                            outDir: String, checkpointDir: String,
                            nFiles: Int = 8, width: String = "1 hour",
                            watermark: String = "10 minutes"): DataFrame = {
-    require(nFiles >= 2, s"need >= 2 files for a multi-batch replay: $nFiles")
     val spark = events.sparkSession
-    // time-ranged split: micro-batches arrive in roughly event-time
-    // order, the shape a real replayed stream has (and what lets the
-    // watermark actually advance batch-over-batch)
-    events.repartitionByRange(nFiles, col("ts"))
-      .write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    // (windows × types) state is tiny — the replay pin holds it; conf
-    // restored after the bounded replay (see the sessionize replay's
-    // note on state-partition pinning)
-    ReplayConf.withReplayPartitions(spark) {
-      val q = tumbling(stream, width, watermark).writeStream
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("overwrite").parquet(outDir); ()
-        }.start()
-      q.awaitTermination()
+    // time-ranged split: micro-batches arrive in event-time order, the
+    // shape a real replayed stream has (and what lets the watermark
+    // actually advance batch-over-batch)
+    val staged = Replay.stage(events.repartitionByRange(nFiles, col("ts")),
+      srcDir, nFiles)
+    val windows = tumbling(staged.stream, width, watermark)
+    Replay.drainEach(windows, checkpointDir, "complete") { (b, _) =>
+      b.write.mode("overwrite").parquet(outDir)
     }
-    spark.read.parquet(outDir)
+    Replay.readBack(spark, outDir, windows.schema)
       .orderBy(col("win_start"), col("event_type"))
   }
 
@@ -120,39 +106,17 @@ object StreamingWindows {
     * Output: identical to `event_rolling_wau`. */
   def wauParityReplay(events: DataFrame, srcDir: String, outDir: String,
                       checkpointDir: String, nFiles: Int = 5): DataFrame = {
-    require(nFiles >= 2, s"need >= 2 files for a multi-batch replay: $nFiles")
     val spark = events.sparkSession
-    events.select(col("event_id"), col("ts"), col("user_id"))
-      .repartitionByRange(nFiles, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val pairs = stream.select(
-      date_trunc("day", col("ts")).as("day"), col("user_id"))
-    ReplayConf.withReplayPartitions(spark) {
-      val q = StreamingDedup.exactGlobal(pairs, Seq("day", "user_id"))
-        .writeStream
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          b.write.mode("overwrite").parquet(s"$outDir/batch_id=$id"); ()
-        }.start()
-      q.awaitTermination()
-    }
-    val out = new java.io.File(outDir)
-    val committed =
-      if (!out.exists())
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("day",
-              org.apache.spark.sql.types.TimestampType),
-            org.apache.spark.sql.types.StructField("user_id",
-              org.apache.spark.sql.types.LongType))))
-      else spark.read.parquet(outDir).select(col("day"), col("user_id"))
-    graft.operators.Relational.rollingWauFromPairs(committed)
+    val staged = Replay.stage(
+      events.select(col("event_id"), col("ts"), col("user_id"))
+        .repartitionByRange(nFiles, col("event_id")), srcDir, nFiles)
+    val pairs = StreamingDedup.exactGlobal(staged.stream.select(
+      date_trunc("day", col("ts")).as("day"), col("user_id")),
+      Seq("day", "user_id"))
+    Replay.drainEach(pairs, checkpointDir, "append")(Replay.commit(outDir))
+    graft.operators.Relational.rollingWauFromPairs(
+      Replay.readBack(spark, outDir, pairs.schema)
+        .select(col("day"), col("user_id")))
   }
 
   /** STREAMING WEEKLY-OHLC PARITY (round 16) — the batch
@@ -172,43 +136,22 @@ object StreamingWindows {
     * Output: identical to `window_ohlc_weekly`. */
   def ohlcParityReplay(orders: DataFrame, srcDir: String, outDir: String,
                        checkpointDir: String, nFiles: Int = 6): DataFrame = {
-    require(nFiles >= 2, s"need >= 2 files for a multi-batch replay: $nFiles")
     val spark = orders.sparkSession
-    orders.select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
-      .repartitionByRange(nFiles, col("o_orderkey"))
-      .write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
     // split by ORDER KEY, not date: every micro-batch carries orders
     // from across the whole span, so (almost) every day's sum is
     // genuinely assembled from multi-batch state — a date-ranged split
     // would let each day close within one batch and prove nothing
-    val daily = stream
+    val staged = Replay.stage(
+      orders.select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
+        .repartitionByRange(nFiles, col("o_orderkey")), srcDir, nFiles)
+    val daily = staged.stream
       .groupBy(date_trunc("day", col("o_orderdate")).as("day"))
       .agg(sum((col("o_totalprice").cast(DecimalType(12, 2)) * 100)
         .cast("long")).as("rev"))
-    ReplayConf.withReplayPartitions(spark) {
-      val q = daily.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("overwrite").parquet(outDir); ()
-        }.start()
-      q.awaitTermination()
+    Replay.drainEach(daily, checkpointDir, "complete") { (b, _) =>
+      b.write.mode("overwrite").parquet(outDir)
     }
-    val out = new java.io.File(outDir)
-    val committed =
-      if (!out.exists())
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("day",
-              org.apache.spark.sql.types.TimestampType),
-            org.apache.spark.sql.types.StructField("rev",
-              org.apache.spark.sql.types.LongType))))
-      else spark.read.parquet(outDir)
-    graft.operators.Relational.weeklyOhlcFromDaily(committed)
+    graft.operators.Relational.weeklyOhlcFromDaily(
+      Replay.readBack(spark, outDir, daily.schema))
   }
 }

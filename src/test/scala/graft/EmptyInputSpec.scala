@@ -98,6 +98,25 @@ class EmptyInputSpec extends SparkSpec {
       // zero violation counters on empty input)
       "quality_value_ranges")
 
+  test("every stream_* replay answers empty input with the schema it " +
+    "answers real input with (names and types)") {
+    val streamKeys = SparkEntry.queries.keys.filter(_.startsWith("stream_"))
+      .toSeq.sorted
+    assert(streamKeys.size == 15, streamKeys)
+    def shape(name: String, dir: String): Seq[(String, String)] =
+      try SparkEntry.queries(name)(spark, dir).schema.fields.toSeq
+        .map(f => f.name -> f.dataType.catalogString)
+      finally {
+        SparkEntry.harnessScope.release()
+        SparkEntry.drainTransientScratch()
+      }
+    val mismatches = streamKeys.flatMap { name =>
+      val (empty, real) = (shape(name, emptyDir), shape(name, sf0))
+      if (empty == real) None else Some(s"$name: empty $empty vs $real")
+    }
+    assert(mismatches.isEmpty, mismatches.mkString("\n"))
+  }
+
   test("every registered query yields an empty (or constant) result on " +
     "empty inputs — no query throws") {
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {

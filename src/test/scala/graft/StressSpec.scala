@@ -791,24 +791,13 @@ class StressSpec extends SparkSpec {
         .as("text"))
     val base = java.nio.file.Files
       .createTempDirectory("graft_store10x_").toString
-    val srcDir = s"$base/src"
-    docs.repartitionByRange(10, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val now = System.currentTimeMillis()
-    new java.io.File(srcDir).listFiles()
-      .filter(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet"))
-      .sortBy(_.getName).zipWithIndex
-      .foreach { case (f, i) => f.setLastModified(now + i * 2000L) }
-    val stream = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+    val staged = graft.streaming.Replay.stage(
+      docs.repartitionByRange(10, col("doc_id")), s"$base/src", 10)
     val t0 = System.nanoTime()
-    graft.streaming.ReplayConf.withReplayPartitions(spark) {
-      val q = graft.streaming.StreamingDedup.nearDupGate(stream,
+    graft.streaming.Replay.drain(spark) {
+      graft.streaming.StreamingDedup.nearDupGate(staged.stream,
         s"$base/store", s"$base/out", s"$base/ckpt",
         threshold = 0.5, horizonSec = horizon)
-      q.awaitTermination()
     }
     val wall = (System.nanoTime() - t0) / 1e9
     val emitted = spark.read.parquet(s"$base/out").count()
