@@ -538,9 +538,12 @@ object Dedup {
     * docs with no shingles (and for null text). */
   def minHashSignatures(docs: DataFrame, n: Int = 3,
                         numHashes: Int = 64): DataFrame =
-    docs.select(col("doc_id"),
-      graft.functions.VectorFunctions
-        .minHashSig(shingles(col("text"), n), numHashes).as("sig"))
+    docs.select(col("doc_id"), minHashSig(col("text"), n, numHashes).as("sig"))
+
+  /** The signature column of [[minHashSignatures]], for callers that
+    * project it beside other columns. */
+  def minHashSig(text: Column, n: Int = 3, numHashes: Int = 64): Column =
+    graft.functions.VectorFunctions.minHashSig(shingles(text, n), numHashes)
 
   /** LSH band keys: bands of `rowsPerBand` signature entries, bucket =
     * the band's values joined with '_' — a plain decimal string, so the
@@ -550,16 +553,25 @@ object Dedup {
     * not congregate in one null-key bucket and trip the hot-bucket
     * guard. Output: (doc_id, band, bucket string). */
   def lshBands(sigs: DataFrame, numHashes: Int = 64,
-               rowsPerBand: Int = 4): DataFrame = {
+               rowsPerBand: Int = 4): DataFrame =
+    bandRows(sigs, numHashes, rowsPerBand, Seq("doc_id"))
+
+  /** [[lshBands]] with the `keep` columns of `sigs` carried onto every
+    * band row by the same explode — a caller that needs the signature
+    * or an event time beside each bucket never joins it back on.
+    * Output: (keep..., band, bucket). */
+  def bandRows(sigs: DataFrame, numHashes: Int, rowsPerBand: Int,
+               keep: Seq[String]): DataFrame = {
     val nBands = numHashes / rowsPerBand
     val bandCols = (0 until nBands).map { bd =>
       struct(lit(bd).as("band"),
         array_join(slice(col("sig"), bd * rowsPerBand + 1, rowsPerBand)
           .cast("array<string>"), "_").as("bucket"))
     }
+    val kept = keep.map(col)
     sigs.filter(col("sig").isNotNull)
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bucket").as("bucket"))
+      .select(kept :+ explode(array(bandCols: _*)).as("bk"): _*)
+      .select(kept ++ Seq(col("bk.band").as("band"), col("bk.bucket").as("bucket")): _*)
   }
 
   /** BAND-OCCUPANCY AUDIT (round 12) — the diagnostic that SIZES every

@@ -199,8 +199,8 @@ object StreamingCorpus {
       // probe before the cache re-executes the scan and inflates n_in)
       if (pinned.count() == 0L) return
       // the contamination join's OUTPUT is persisted too (round 16):
-      // the dedup gate consumes its batch ~3× (signature build, ts
-      // join, survivor anti-join) and each consumption would re-run
+      // the dedup gate consumes its batch 3× (emptiness probe, the
+      // one-pass band build, survivor anti-join) and each would re-run
       // the 13-gram explosion + broadcast join against the benchmark
       // set — a fixed per-batch constant with no scale payoff
       val clean = StreamingContamination.gateBatch(pinned, bench)

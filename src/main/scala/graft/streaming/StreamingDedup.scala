@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types._
 
 /** Streaming exact deduplication — the streaming face of B1 dedup_exact,
   * the front gate of a continuously-ingesting training-data pipeline
@@ -43,7 +44,7 @@ object StreamingDedup {
     * stream must emit for an in-horizon input — first row per key in
     * (ts, tiebreak) order is representative; we compare key sets, since
     * which duplicate wins is arrival-order-defined in a stream. */
-  def distinctKeys(batch: DataFrame, keys: Seq[String]): Dataset[org.apache.spark.sql.Row] =
+  def distinctKeys(batch: DataFrame, keys: Seq[String]): Dataset[Row] =
     batch.select(keys.map(col): _*).distinct()
 
   /** END-TO-END streaming-dedup parity replay (round 12) — the
@@ -87,7 +88,7 @@ object StreamingDedup {
 
   /** Streaming NEAR-dup dedup — the MinHash-LSH front gate for a
     * continuously-ingesting corpus, composing the batch pieces
-    * (Dedup.minHashSignatures / lshBands) with micro-batch state:
+    * (Dedup.minHashSig / bandRows) with micro-batch state:
     *
     *  per micro-batch —
     *   1. signatures + (band, bucket) keys for the batch (narrow);
@@ -107,26 +108,29 @@ object StreamingDedup {
     *      A near-dup arriving more than a horizon after its twin
     *      re-emits — the same documented trade as [[withinWatermark]].
     *
-    * STORE LAYOUT (round 15 — append-only log + versioned manifest;
-    * VERDICT r14 item 3): each batch writes ONLY its own survivors as
-    * an immutable segment `seg=N/{bands,sigs}` — per-batch write volume
-    * is O(batch), where the previous whole-store rewrite was O(store)
-    * (horizon-sized) every batch. A tiny manifest `manifest/v=N` (one
-    * row per live segment: seg id, max event time, effective cutoff)
-    * is the committed store state: batch N reads the largest manifest
-    * v < N and unions the listed segments, each filtered to
-    * `ts > eff_cutoff(seg)`. The per-segment RUNNING-MAX cutoff
-    * reproduces the rewrite semantics bit-for-bit ("once pruned, gone
-    * forever" even under event-time regression across batches): every
-    * batch raises each live segment's eff_cutoff to
-    * max(prev, maxTs(batch) − horizon), exactly the filter chain the
-    * old rewrite applied physically. The horizon COMPACTING the store
-    * is now free where it bites hardest — a segment whose max_ts ≤ its
+    * STORE LAYOUT — an append-only signature log + versioned manifest:
+    * each batch writes ONLY its own survivors as one immutable segment
+    * table `seg=N/sigs` (doc_id, ts, sig), so per-batch write volume is
+    * O(batch), never O(store). The store keeps no band table: the
+    * gate derives the store's (band, bucket) rows on read with the same
+    * [[Dedup.bandRows]] explode the batch side uses, each row still
+    * carrying its signature — one write per batch, and no join back
+    * from bands to signatures. Segments are read with their known
+    * schema ([[SigSchema]]), so a read launches no schema-inference job
+    * however many segments are live. A tiny manifest `manifest/v=N`
+    * (one row per live segment: seg id, max event time, effective
+    * cutoff) is the committed store state: batch N reads the largest
+    * manifest v < N and unions the listed segments, each filtered to
+    * `ts > eff_cutoff(seg)`. The per-segment RUNNING-MAX cutoff keeps
+    * "once pruned, gone forever" even under event-time regression
+    * across batches: every batch raises each live segment's eff_cutoff
+    * to max(prev, maxTs(batch) − horizon). A segment whose max_ts ≤ its
     * eff_cutoff is fully expired and simply leaves the manifest (no
     * IO); a physical rewrite (all live rows → one segment) runs only
     * when the live-segment count exceeds `maxSegments`, bounding read
     * fan-in and dead-row disk at a constant factor while keeping write
-    * amplification O(1) amortized.
+    * amplification O(1) amortized. A segment an older layout wrote as
+    * `seg=N/{bands,sigs}` stays readable: the reader opens only `sigs`.
     *
     * Replay (exactly-once): a replayed batch N re-reads manifest
     * v=N−1 — its original input state — and idempotently overwrites
@@ -134,6 +138,14 @@ object StreamingDedup {
     * last two manifests and deletes the rest, so a crash between the
     * segment write and the checkpoint commit never orphans state the
     * replay needs.
+    *
+    * PRECONDITION: `doc_id` is unique within a micro-batch — it is the
+    * key the gate suppresses, emits and stores by. It is not checked:
+    * an exact check is a shuffle of the batch by doc_id, the cost the
+    * one-pass band frame exists to avoid. A batch that repeats a doc_id
+    * still suppresses and emits by doc_id (every row of it shares one
+    * fate), but the store keeps one signature row per repeated row until
+    * the horizon expires them.
     *
     * 100 TB shape: everything is equi-joins on (band, bucket) plus
     * narrow signature maps; the store is a bounded set of immutable
@@ -156,15 +168,15 @@ object StreamingDedup {
       .start()
 
   /** One micro-batch of the near-dup gate (exposed for direct testing —
-    * same reason StreamingExport.writeBatch is). The store is SPLIT
-    * (round 13) into per-segment `bands` (doc_id, ts, band, bucket)
-    * and `sigs` (doc_id, ts, sig): a single table would duplicate
-    * each survivor's numHashes-long signature across its 16 band rows.
-    * Bucket matching joins the narrow band table and fetches the
-    * candidate's signature once per matched doc. Segment + manifest
-    * land inside seg=N / manifest/v=N before the checkpoint commits,
-    * so a crash between them replays the whole batch idempotently
-    * (see the append-only layout note on [[nearDupGate]]). */
+    * same reason StreamingExport.writeBatch is). The batch's band frame
+    * is ONE narrow projection — (doc_id, ts, sig) exploded into band
+    * rows — and the store's band rows are derived from its `sigs`
+    * segments by the same explode, so both sides of the bucket join
+    * carry their signatures and nothing is joined back on doc_id.
+    * `batch` must hold each doc_id once (the precondition on
+    * [[nearDupGate]]). Segment + manifest land inside seg=N / manifest/v=N before the
+    * checkpoint commits, so a crash between them replays the whole
+    * batch idempotently (see the layout note on [[nearDupGate]]). */
   def nearDupGateBatch(batch: DataFrame, batchId: Long,
                        storeDir: String, outDir: String,
                        threshold: Double, horizonSec: Long,
@@ -172,14 +184,13 @@ object StreamingDedup {
                        maxSegments: Int = 16): Unit = {
     val spark = batch.sparkSession
     if (batch.isEmpty) return
-    val sigs = Dedup.minHashSignatures(batch, n, numHashes)
-    val bands = Dedup.lshBands(sigs, numHashes, rowsPerBand)
-      .join(sigs, "doc_id")
-      .join(batch.select(col("doc_id"), col("ts")), "doc_id")
-      .select(col("doc_id"), col("ts"), col("sig"), col("band"), col("bucket"))
-      .persist()
+    val bands = Dedup.bandRows(
+      batch.select(col("doc_id"), col("ts"),
+        Dedup.minHashSig(col("text"), n, numHashes).as("sig")),
+      numHashes, rowsPerBand, SigCols).persist()
     val manifest = readManifest(spark, storeDir, batchId)
-    val (storeBands, storeSigs) = readStore(spark, storeDir, manifest)
+    val storeBands = Dedup.bandRows(liveSigs(spark, storeDir, manifest),
+      numHashes, rowsPerBand, SigCols)
 
     // estimated Jaccard between two signatures: fraction of agreeing
     // minhash entries (exact arithmetic; deterministic). Native
@@ -189,15 +200,15 @@ object StreamingDedup {
       graft.functions.VectorFunctions.longArrayAgree(a, b)
         .cast("double") / numHashes
 
-    // cross-batch hits: share a bucket with a stored survivor (narrow
-    // band-table join), then fetch that survivor's signature and
-    // confirm the agreement clears the threshold
+    // cross-batch hits: share a bucket with a stored survivor whose
+    // signature agreement clears the threshold. Persisted: both the
+    // suppressed set and the in-batch suppressor side consume it, and
+    // the planner gives the two copies different build sides, so
+    // without the cache the store is scanned and joined twice
     val storeHits = bands.as("x").join(storeBands.as("s"),
         col("x.band") === col("s.band") && col("x.bucket") === col("s.bucket"))
-      .join(storeSigs.select(col("doc_id").as("sd"), col("sig").as("ssig")),
-        col("s.doc_id") === col("sd"))
-      .filter(sigAgree(col("x.sig"), col("ssig")) >= threshold)
-      .select(col("x.doc_id")).distinct()
+      .filter(sigAgree(col("x.sig"), col("s.sig")) >= threshold)
+      .select(col("x.doc_id")).distinct().persist()
 
     // in-batch hits: same bucket as an EARLIER batch doc ((ts, doc_id)
     // order), signature-verified — the earlier doc is the survivor.
@@ -223,61 +234,52 @@ object StreamingDedup {
     // form ran a separate agg(max).head() job per micro-batch)
     val obs = org.apache.spark.sql.Observation(s"neardup_gate_$batchId")
     // the suppressed doc_id set is tiny (≤ batch cardinality) but its
-    // SUBPLAN reads the store segments — persist it so the survivors
-    // write and the segment build don't each re-scan the store
+    // SUBPLAN runs both bucket joins — persist it so the survivors
+    // write and the segment build don't each re-run them
     val suppressed = storeHits.union(inBatchHits).distinct().persist()
-    val survivors = batch
+    batch
       .observe(obs, max(col("ts")).as("max_ts"))
       .join(suppressed, Seq("doc_id"), "left_anti")
-    survivors.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
 
-    // append-only commit (round 15): THIS batch's survivors land as an
-    // immutable segment — O(batch) write, never O(store); bands and
-    // sigs stay separate narrow tables (split-store note above)
-    val survBands = bands.join(survivors.select("doc_id"), "doc_id")
     val maxTs = obs.get("max_ts").asInstanceOf[java.sql.Timestamp]
     val cutoff = new java.sql.Timestamp(maxTs.getTime - horizonSec * 1000L)
     // every live segment's effective cutoff rises to this batch's —
-    // the running max reproduces the old whole-store rewrite's filter
-    // chain exactly ("once pruned, gone forever", even when event time
-    // regresses across batches); a segment whose max_ts fell behind its
-    // cutoff is fully expired and leaves the manifest with ZERO IO —
-    // the horizon biting IS the cheap compaction
+    // the running max keeps "once pruned, gone forever" even when event
+    // time regresses across batches; a segment whose max_ts fell behind
+    // its cutoff is fully expired and leaves the manifest with ZERO IO
+    // — the horizon biting IS the cheap compaction
     val raised = manifest.map { s =>
       val eff = new java.sql.Timestamp(
         math.max(s.effCutoff.getTime, cutoff.getTime))
       s.copy(effCutoff = eff)
     }.filter(s => s.maxTs.after(s.effCutoff))
-    val segBands =
-      survBands.select(col("doc_id"), col("ts"), col("band"), col("bucket"))
-        .filter(col("ts") > cutoff)
-    // one signature row per surviving doc, read from the PERSISTED
-    // bands frame (every band row of a doc carries the identical sig —
-    // re-deriving from minHashSignatures would recompute the shingle +
-    // 64-hash pass a second time per batch)
-    val segSigs = survBands.select(col("doc_id"), col("ts"), col("sig"))
-      .dropDuplicates("doc_id").filter(col("ts") > cutoff)
+    // append-only commit: THIS batch's survivors land as an immutable
+    // segment — O(batch) write, never O(store). One signature row per
+    // surviving doc: every signed doc has exactly one band-0 row (doc_id
+    // is unique in the batch — the precondition on nearDupGate), so the
+    // persisted band frame yields the sigs without a shuffle
+    val segSigs = bands.filter(col("band") === 0)
+      .join(suppressed, Seq("doc_id"), "left_anti")
+      .filter(col("ts") > cutoff)
+      .select(SigSchema.fields.map(f => col(f.name).cast(f.dataType)): _*)
+    val segDir = s"$storeDir/seg=$batchId/sigs"
     val newManifest =
       if (raised.size + 1 > maxSegments) {
         // physical compaction (rare): all live rows fold into seg=N —
         // bounds read fan-in at maxSegments and dead-row disk at a
         // constant factor; amortized write stays O(batch)
-        liveBands(spark, storeDir, raised).unionByName(segBands)
-          .write.mode("overwrite").parquet(s"$storeDir/seg=$batchId/bands")
         liveSigs(spark, storeDir, raised).unionByName(segSigs)
-          .write.mode("overwrite").parquet(s"$storeDir/seg=$batchId/sigs")
-        Seq(StoreSegment(batchId,
-          raised.map(_.maxTs.getTime).foldLeft(maxTs.getTime)(math.max)
-            |> (t => new java.sql.Timestamp(t)), cutoff))
+          .write.mode("overwrite").parquet(segDir)
+        Seq(StoreSegment(batchId, new java.sql.Timestamp(
+          (maxTs.getTime +: raised.map(_.maxTs.getTime)).max), cutoff))
       } else {
-        segBands.write.mode("overwrite")
-          .parquet(s"$storeDir/seg=$batchId/bands")
-        segSigs.write.mode("overwrite")
-          .parquet(s"$storeDir/seg=$batchId/sigs")
+        segSigs.write.mode("overwrite").parquet(segDir)
         raised :+ StoreSegment(batchId, maxTs, cutoff)
       }
     writeManifest(spark, storeDir, batchId, newManifest)
     bands.unpersist()
+    storeHits.unpersist(blocking = false)
     suppressed.unpersist(blocking = false)
 
     // GC: batch N+1 reads manifest v=N; a replayed batch N re-reads
@@ -295,64 +297,35 @@ object StreamingDedup {
                                              maxTs: java.sql.Timestamp,
                                              effCutoff: java.sql.Timestamp)
 
-  /** Tiny pipe-forward helper for the compaction fold above. */
-  implicit private class Pipe[A](private val a: A) {
-    def |>[B](f: A => B): B = f(a)
-  }
+  /** The schema of a segment's `sigs` table: written cast to it, read
+    * with it. */
+  private val SigSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("ts", TimestampType),
+    StructField("sig", ArrayType(LongType))))
 
-  private def segPaths(storeDir: String, segs: Seq[StoreSegment],
-                       half: String): Seq[(String, StoreSegment)] =
-    segs.map(s => (s"$storeDir/seg=${s.seg}/$half", s))
+  private val SigCols: Seq[String] = SigSchema.fieldNames.toSeq
 
-  /** Union of the live segments' band rows, each filtered to its OWN
-    * effective cutoff (per-segment running max — see the layout note
-    * on [[nearDupGate]]). */
-  private def liveBands(spark: SparkSession, storeDir: String,
-                        segs: Seq[StoreSegment]): DataFrame =
-    segPaths(storeDir, segs, "bands").map { case (p, s) =>
-      spark.read.parquet(p).filter(col("ts") > lit(s.effCutoff))
-    }.reduceOption(_ unionByName _).getOrElse(emptyBands(spark))
-
+  /** Union of the live segments' signature rows, each filtered to its
+    * OWN effective cutoff (per-segment running max — see the layout
+    * note on [[nearDupGate]]). */
   private def liveSigs(spark: SparkSession, storeDir: String,
                        segs: Seq[StoreSegment]): DataFrame =
-    segPaths(storeDir, segs, "sigs").map { case (p, s) =>
-      spark.read.parquet(p).filter(col("ts") > lit(s.effCutoff))
-    }.reduceOption(_ unionByName _).getOrElse(emptySigs(spark))
-
-  private def emptyBands(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("band", IntegerType),
-        StructField("bucket", StringType))))
-  }
-
-  private def emptySigs(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("sig", ArrayType(LongType)))))
-  }
-
-  /** The store state batch `batchId` must read: the live (bands, sigs)
-    * union behind the largest manifest v < batchId (a replayed batch
-    * re-reads its original input state), or empty frames when no
-    * manifest exists yet. */
-  private def readStore(spark: SparkSession, storeDir: String,
-                        manifest: Seq[StoreSegment]): (DataFrame, DataFrame) =
-    (liveBands(spark, storeDir, manifest),
-      liveSigs(spark, storeDir, manifest))
+    segs.map { s =>
+      spark.read.schema(SigSchema).parquet(s"$storeDir/seg=${s.seg}/sigs")
+        .filter(col("ts") > lit(s.effCutoff))
+    }.reduceOption(_ unionByName _)
+      .getOrElse(spark.createDataFrame(java.util.List.of[Row](), SigSchema))
 
   /** The live band rows of the store state batch `batchId` would read
-    * (largest manifest strictly below it, per-segment cutoffs applied)
-    * — the ops/spec surface for "what did batch N actually consult". */
+    * (largest manifest strictly below it, per-segment cutoffs applied),
+    * banded as the gate's defaults band them (64 hashes, 4 rows per
+    * band) — the ops/spec surface for "what did batch N actually
+    * consult". Output: (doc_id, ts, sig, band, bucket). */
   private[graft] def storeStateFor(spark: SparkSession, storeDir: String,
                                    batchId: Long): DataFrame =
-    liveBands(spark, storeDir, readManifest(spark, storeDir, batchId))
+    Dedup.bandRows(liveSigs(spark, storeDir,
+      readManifest(spark, storeDir, batchId)), 64, 4, SigCols)
 
   /** Live segments of the largest committed manifest strictly below
     * `batchId`; empty when the store has no usable manifest yet.
@@ -461,9 +434,13 @@ object StreamingDedup {
     }
   }
 
-  /** The CURRENT live store contents (latest manifest) — the spec's
-    * window into state boundedness; not used by the gate itself. */
+  /** The CURRENT live store contents (latest manifest) as (band rows
+    * banded like [[storeStateFor]], signature rows) — the spec's window
+    * into state boundedness; not used by the gate itself. */
   private[graft] def storeContents(spark: SparkSession,
-                                       storeDir: String): (DataFrame, DataFrame) =
-    readStore(spark, storeDir, readManifest(spark, storeDir, Long.MaxValue))
+                                   storeDir: String): (DataFrame, DataFrame) = {
+    val sigs = liveSigs(spark, storeDir,
+      readManifest(spark, storeDir, Long.MaxValue))
+    (Dedup.bandRows(sigs, 64, 4, SigCols), sigs)
+  }
 }

@@ -109,8 +109,10 @@ object StreamingExport {
       exportStream(staged.stream, Seq("event_type"), outDir, checkpointDir)
     }
     // the duplicate delivery: batch N's body re-runs from its original
-    // input file — at-least-once made visible
-    redeliver.filter(_ < staged.files.length).foreach { n =>
+    // input file — at-least-once made visible. A split that staged
+    // fewer than N + 1 files (a tiny or empty input) redelivers its last
+    // batch instead, so the redelivery always runs
+    redeliver.map(n => math.min(n, staged.files.length - 1L)).foreach { n =>
       val redelivered = spark.read.schema(events.schema)
         .parquet(staged.files(n.toInt).getPath)
       writeBatch(ExportPipeline.route(redelivered, Seq("event_type")),

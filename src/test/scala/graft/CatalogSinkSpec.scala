@@ -63,8 +63,7 @@ class CatalogSinkSpec extends SparkSpec {
       db = "graft_test", table = "stream_orc",
       partitionColumns = Map("STREAM_ORC" -> Seq("CONTINENT")))
     ExportPipeline.dropTableAndLocation(spark, "graft_test", "stream_orc")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_cat_ckpt_").toString
+    val ckpt = Scratch.dir("graft_cat_ckpt_").toString
     val mem = MemoryStream[(Long, String, String)]
     mem.addData((1L, "a", "EU"), (2L, "b", null.asInstanceOf[String]))
     val q = GraftExportClient.exportStreamCatalog(
@@ -128,11 +127,10 @@ class CatalogSinkSpec extends SparkSpec {
   }
 
   test("path-based ORC write + ORC compaction round-trip") {
-    import java.nio.file.Files
     val rows = (1L to 200L)
       .map(i => (i, s"msg$i", if (i % 2 == 0) "EU" else "AS"))
       .toDF("id", "msg", "continent").repartition(25)
-    val out = Files.createTempDirectory("graft_orc_path_").toString
+    val out = Scratch.dir("graft_orc_path_").toString
     // fragment deliberately (repartitionFirst=false → many files), ORC
     ExportPipeline.writeRouted(
       ExportPipeline.route(rows, Seq("continent")), out,
@@ -141,7 +139,7 @@ class CatalogSinkSpec extends SparkSpec {
     assert(back.count() == 200)
     assert(back.inputFiles.forall(_.endsWith(".orc")))
     // ORC→ORC compaction: fewer files, identical content
-    val compacted = Files.createTempDirectory("graft_orc_cpt_").toString
+    val compacted = Scratch.dir("graft_orc_cpt_").toString
     val (n, inFiles, _) = ExportPipeline.compact(
       spark, out, compacted, Seq("continent"), format = "orc")
     assert(n == 200)

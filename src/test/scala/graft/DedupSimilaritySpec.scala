@@ -672,7 +672,7 @@ class DedupSimilaritySpec extends SparkSpec {
   test("persisted IVF quantizer: serve path bit-identical to in-session " +
     "training, and plans no training jobs") {
     val p = Similarity.prepared(emb)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_cent_").toString
+    val dir = Scratch.dir("graft_ivf_cent_").toString
     Similarity.saveCentroids(
       Similarity.trainCentroids(p, nlist = 8, iters = 2), dir)
     val served = Similarity.ivfTopKWith(emb,
@@ -694,10 +694,10 @@ class DedupSimilaritySpec extends SparkSpec {
   test("persisted residual IVF-PQ artifacts: serve path bit-identical " +
     "to in-session training, and plans no training jobs") {
     val p = Similarity.prepared(emb)
-    val qdir = java.nio.file.Files.createTempDirectory("graft_ivfr_cent_").toString
+    val qdir = Scratch.dir("graft_ivfr_cent_").toString
     Similarity.saveCentroids(
       Similarity.trainCentroids(p, nlist = 16, iters = 2), qdir)
-    val cdir = java.nio.file.Files.createTempDirectory("graft_ivfr_cb_").toString
+    val cdir = Scratch.dir("graft_ivfr_cb_").toString
     Similarity.saveCodebook(
       Similarity.trainResidualPqCodebook(emb,
         Similarity.loadCentroids(spark, qdir)), cdir)

@@ -11,18 +11,16 @@ import org.apache.spark.sql.functions._
 class EmptyInputSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty_sf_").toString
+    val dir = Scratch.dir("graft_empty_sf_").toString
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       // schema-preserving empty copy of each table (raw parquet read, so
       // the NANOS-timestamp shape of events survives verbatim)
       spark.read.parquet(s"$sf0/$t.parquet").limit(0)
-        .write.mode("overwrite").parquet(s"$emptyTmp/$t.parquet")
+        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
     }
-    emptyTmp
+    dir
   }
-  private val emptyTmp =
-    java.nio.file.Files.createTempDirectory("graft_empty_sf_").toString
 
   test("null text / null embedding rows flow through the core operator " +
     "families without throwing, and never surface as results") {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions.col
 
 /** End-to-end facade coverage: the exact call sequence a reference user
@@ -16,7 +15,7 @@ class GraftExportClientSpec extends SparkSpec {
       "hive.partition.columns" -> "alerts:continent"))
     val alerts = Seq((1L, "fab-02 inoperable", "EU"), (2L, "ok", null: String))
       .toDF("id", "msg", "continent")
-    val out = Files.createTempDirectory("graft_client_").toString
+    val out = Scratch.dir("graft_client_").toString
     GraftExportClient.exportBatch(alerts, "ALERTS", cfg, out)
     val back = spark.read.parquet(s"$out/alerts")
     assert(back.count() == 2)
@@ -36,14 +35,14 @@ class GraftExportClientSpec extends SparkSpec {
       .map(i => (i, s"msg$i", if (i % 2 == 0) "EU" else "AS"))
       .toDF("id", "msg", "continent")
       .repartition(25)
-    val out = Files.createTempDirectory("graft_client_frag_").toString
+    val out = Scratch.dir("graft_client_frag_").toString
     // fragment deliberately: exportBatch itself anti-fragments (it
     // repartitions by the partition cols), so simulate a long-lived
     // sink's accretion with a raw many-task write of the same routing
     graft.operators.ExportPipeline.writeRouted(
       graft.operators.ExportPipeline.route(alerts, Seq("continent")),
       s"$out/alerts", repartitionFirst = false)
-    val compacted = Files.createTempDirectory("graft_client_cpt_").toString
+    val compacted = Scratch.dir("graft_client_cpt_").toString
     val (rows, inFiles, _) =
       GraftExportClient.compactTable(spark, "ALERTS", cfg, out, compacted)
     assert(rows == 200L)

@@ -161,7 +161,7 @@ class GraphAnnSpec extends SparkSpec {
   }
 
   private def tmpIndexDir(): String =
-    java.nio.file.Files.createTempDirectory("graft_hnsw_idx_")
+    Scratch.dir("graft_hnsw_idx_")
       .resolve("index").toString
 
   test("served HNSW answers bit-identically to the per-query rebuild, " +
@@ -266,8 +266,7 @@ class GraphAnnSpec extends SparkSpec {
 
   test("upsertHnswIndex: base-then-delta equals the from-scratch build " +
     "node-for-node, and the upserted index serves identically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hnsw_up_")
-      .toString
+    val dir = Scratch.dir("graft_hnsw_up_").toString
     val full = emb.filter(col("vec_id") < 60).coalesce(1)
     val base = emb.filter(col("vec_id") < 45).coalesce(1)
     val delta = emb.filter(col("vec_id") >= 45 && col("vec_id") < 60)

@@ -12,8 +12,7 @@ package graft
 class MemoDepsSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_memodeps_sf_").toString
+    val dir = Scratch.dir("graft_memodeps_sf_").toString
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       spark.read.parquet(s"$sf0/$t.parquet").limit(0)

@@ -4,7 +4,6 @@ import graft.operators.ExportPipeline
 import graft.streaming.StreamingExport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import java.nio.file.Files
 
 /** Golden write-layout + streaming exactly-once tests (SURVEY.md §5.2
   * items 3-4): partition directory layout with sentinel directories, and
@@ -17,7 +16,7 @@ class PipelineSpec extends SparkSpec {
       (1L, "alpha", "EU"), (2L, "beta", "EU"),
       (3L, "gamma", null.asInstanceOf[String]), (4L, "delta", "  "))
       .toDF("id", "msg", "continent")
-    val out = Files.createTempDirectory("graft_golden_").toString
+    val out = Scratch.dir("graft_golden_").toString
     ExportPipeline.writeRouted(ExportPipeline.route(df, Seq("continent")), out)
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
       .map(_.getName).sorted.toSeq
@@ -35,14 +34,14 @@ class PipelineSpec extends SparkSpec {
     // fragment: 40 tasks × 2 partitions → ~80 small files
     val df = (1L to 400L).map(i => (i, s"msg$i", if (i % 2 == 0) "EU" else "AS"))
       .toDF("id", "msg", "continent")
-    val frag = Files.createTempDirectory("graft_frag_").toString
+    val frag = Scratch.dir("graft_frag_").toString
     ExportPipeline.route(df, Seq("continent"))
       .repartition(40)
       .write.mode("overwrite").partitionBy("continent").parquet(frag)
     val fragFiles = spark.read.parquet(frag).inputFiles.length
     assert(fragFiles > 20, s"fixture not fragmented: $fragFiles files")
 
-    val out = Files.createTempDirectory("graft_compact_").toString
+    val out = Scratch.dir("graft_compact_").toString
     val (rows, inFiles, inBytes) =
       ExportPipeline.compact(spark, frag, out, Seq("continent"))
     assert(rows == 400L && inFiles == fragFiles.toLong && inBytes > 0L)
@@ -66,11 +65,11 @@ class PipelineSpec extends SparkSpec {
     // scan needs
     val df = (1L to 400L).map(i => (f"$i%04d", s"msg$i", if (i % 2 == 0) "EU" else "AS"))
       .toDF("id", "msg", "continent")
-    val frag = Files.createTempDirectory("graft_fragsort_").toString
+    val frag = Scratch.dir("graft_fragsort_").toString
     ExportPipeline.route(df, Seq("continent"))
       .repartition(40)
       .write.mode("overwrite").partitionBy("continent").parquet(frag)
-    val out = Files.createTempDirectory("graft_compact_sorted_").toString
+    val out = Scratch.dir("graft_compact_sorted_").toString
     // tiny file target → several files per partition, each range-disjoint
     val (rows, _, _) = ExportPipeline.compact(spark, frag, out,
       Seq("continent"), targetFileBytes = 4096L, sortBy = Seq("payload_json"))
@@ -98,7 +97,7 @@ class PipelineSpec extends SparkSpec {
 
   test("ORC write path: the reference's required sink format round-trips") {
     val df = Seq((1L, "a", "EU"), (2L, "b", "AS")).toDF("id", "msg", "region")
-    val out = Files.createTempDirectory("graft_orc_").toString
+    val out = Scratch.dir("graft_orc_").toString
     ExportPipeline.writeRouted(ExportPipeline.route(df, Seq("region")), out,
       format = "orc")
     val back = spark.read.format("orc").load(out)
@@ -118,7 +117,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("schema generations: evolved source schema reads via mergeSchema") {
-    val base = Files.createTempDirectory("graft_gen_").toString
+    val base = Scratch.dir("graft_gen_").toString
     Seq((1L, "a")).toDF("id", "msg").write.parquet(s"$base/gen=1")
     Seq((2L, "b", "extra")).toDF("id", "msg", "note").write.parquet(s"$base/gen=2")
     val merged = spark.read.option("mergeSchema", "true").parquet(base)
@@ -130,8 +129,8 @@ class PipelineSpec extends SparkSpec {
   test("streaming export: micro-batched, checkpointed, replay-idempotent") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String)]
-    val out = Files.createTempDirectory("graft_stream_out_").toString
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt_").toString
+    val out = Scratch.dir("graft_stream_out_").toString
+    val ckpt = Scratch.dir("graft_stream_ckpt_").toString
     mem.addData((1L, "EU"), (2L, "AS"), (3L, null.asInstanceOf[String]))
     val q = StreamingExport.exportStream(
       mem.toDF().toDF("id", "continent"), Seq("continent"), out, ckpt)
@@ -166,8 +165,8 @@ class PipelineSpec extends SparkSpec {
     "the source carries ts (batch-max vs wall clock = sink lag)") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val out = Files.createTempDirectory("graft_obs_out_").toString
-    val ckpt = Files.createTempDirectory("graft_obs_ckpt_").toString
+    val out = Scratch.dir("graft_obs_out_").toString
+    val ckpt = Scratch.dir("graft_obs_ckpt_").toString
     val t1 = new java.sql.Timestamp(1700000000000L)
     val t2 = new java.sql.Timestamp(1700000060000L)
     mem.addData((1L, t1, "EU"), (2L, t2, "AS"))
@@ -187,8 +186,8 @@ class PipelineSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.DataFrame
     val mem = MemoryStream[(Long, String)]
-    val out = Files.createTempDirectory("graft_fail_out_").toString
-    val ckpt = Files.createTempDirectory("graft_fail_ckpt_").toString
+    val out = Scratch.dir("graft_fail_out_").toString
+    val ckpt = Scratch.dir("graft_fail_ckpt_").toString
     mem.addData((1L, "EU"), (2L, "AS"))
     @volatile var injectFailure = true
     def start() = mem.toDF().toDF("id", "continent")
@@ -223,7 +222,7 @@ class PipelineSpec extends SparkSpec {
 
   test("exactly-once export replay: a forced batch redelivery lands zero " +
     "duplicate rows (stream_export_exactly_once's claim)") {
-    val base = Files.createTempDirectory("graft_eo_").toString
+    val base = Scratch.dir("graft_eo_").toString
     val events = graft.Tables.events(spark, "/root/testdata/sf0.001")
     val out = StreamingExport.exportExactlyOnceReplay(events,
       s"$base/src", s"$base/out", s"$base/ckpt", nFiles = 5,
@@ -240,6 +239,27 @@ class PipelineSpec extends SparkSpec {
     assert(dup == 0L, s"$dup duplicated (batch, payload) rows")
     // summary equals the batch-side truth
     assert(out.agg(org.apache.spark.sql.functions.sum("n_rows")).head.getLong(0) == nIn)
+  }
+
+  test("exactly-once export replay: a split that stages fewer files than " +
+    "the redelivered batch id redelivers its last batch") {
+    val base = Scratch.dir("graft_eo_one_").toString
+    // one event: the 5-way range split stages a single file (batch 0)
+    val events = graft.Tables.events(spark, "/root/testdata/sf0.001").limit(1)
+    val out = StreamingExport.exportExactlyOnceReplay(events,
+      s"$base/src", s"$base/out", s"$base/ckpt", nFiles = 5,
+      replayBatch = 1L)
+    assert(new java.io.File(s"$base/src").listFiles()
+      .count(_.getName.endsWith(".parquet")) == 1, "expected a one-file split")
+    // the redelivered commit rewrote batch 0 AFTER the stream committed it
+    val committedAt = new java.io.File(s"$base/ckpt/commits/0").lastModified()
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isFile) Seq(f) else f.listFiles().toSeq.flatMap(files)
+    val parts = files(new java.io.File(s"$base/out/batch_id=0"))
+      .filter(_.getName.startsWith("part-"))
+    assert(parts.nonEmpty && parts.forall(_.lastModified() > committedAt),
+      "batch 0 was not redelivered after its streaming commit")
+    assert(out.agg(org.apache.spark.sql.functions.sum("n_rows")).head.getLong(0) == 1L)
   }
 
   test("streaming exact dedup drops duplicate keys across micro-batches") {

@@ -288,8 +288,7 @@ class PlanInvariantsSpec extends SparkSpec {
     "is a PartitionFilter and the listing touches only candidate cells") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.functions.{col, max}
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_zorder_spec_").toString + "/layout"
+    val tmp = Scratch.dir("graft_zorder_spec_").toString + "/layout"
     val orders = Tables.orders(spark, sf0)
     graft.operators.ExportPipeline.zorderWrite(spark, orders, tmp)
     val total = spark.read.parquet(tmp).select(col("zcell"))

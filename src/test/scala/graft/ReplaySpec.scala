@@ -10,8 +10,7 @@ class ReplaySpec extends SparkSpec {
 
   test("Replay stager: batch i reads file i, an empty batch file still " +
     "takes a batch id, and the staged files come back in batch order") {
-    val base = java.nio.file.Files.createTempDirectory("graft_replay_spec_")
-      .toString
+    val base = Scratch.dir("graft_replay_spec_").toString
     val srcDir = s"$base/src"
     val keys = spark.range(0, 300).select(col("id").as("k"))
     // 3 ranged files, then one empty batch file whose name sorts last
@@ -55,8 +54,7 @@ class ReplaySpec extends SparkSpec {
   }
 
   test("Replay.stage refuses a single-file replay") {
-    val base = java.nio.file.Files.createTempDirectory("graft_replay_one_")
-      .toString
+    val base = Scratch.dir("graft_replay_one_").toString
     intercept[IllegalArgumentException] {
       Replay.stage(spark.range(3).toDF(), s"$base/src", nFiles = 1)
     }

@@ -214,7 +214,7 @@ class SourcesSpec extends SparkSpec {
     "record (Spark 4 flags arity mismatches; the malformed set still " +
     "uses numeric failures so the contract survives parsers that don't)") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_arity_")
+    val dir = Scratch.dir("graft_arity_")
     java.nio.file.Files.write(dir.resolve("r.csv"),
       "1,2\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val schema = StructType(Seq(

@@ -112,8 +112,7 @@ class StatefulSessionsSpec extends SparkSpec {
   test("sessionize parity replay: flatMapGroupsWithState over a " +
     "multi-batch file replay equals the batch session_window, " +
     "including the end-of-stream flush of trailing sessions") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_sess_parity_").toString
+    val base = Scratch.dir("graft_sess_parity_").toString
     try {
       val events = Tables.events(spark, sf0)
       val out = StatefulSessions.sessionizeParityReplay(
@@ -126,18 +125,12 @@ class StatefulSessionsSpec extends SparkSpec {
       val commits = new java.io.File(s"$base/ckpt/commits").list()
         .count(!_.endsWith(".tmp"))
       assert(commits >= 5, s"expected a multi-batch replay, got $commits")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(base))
-    }
+    } finally Scratch.rm(new java.io.File(base))
   }
 
   test("tumbling parity replay equals the batch aggregation AND really " +
     "ran as multiple micro-batches (cross-batch state, not one gulp)") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_stream_parity_").toString
+    val base = Scratch.dir("graft_stream_parity_").toString
     try {
       val events = Tables.events(spark, sf0)
       val out = graft.streaming.StreamingWindows.tumblingParityReplay(
@@ -151,18 +144,12 @@ class StatefulSessionsSpec extends SparkSpec {
       val commits = new java.io.File(s"$base/ckpt/commits").list()
         .count(!_.endsWith(".tmp"))
       assert(commits >= 3, s"expected a multi-batch replay, got $commits")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(base))
-    }
+    } finally Scratch.rm(new java.io.File(base))
   }
 
   test("WAU parity replay equals the batch rolling WAU and committed " +
     "each (user, day) pair in exactly one micro-batch") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_stream_wau_").toString
+    val base = Scratch.dir("graft_stream_wau_").toString
     try {
       val events = Tables.events(spark, sf0)
       val out = graft.streaming.StreamingWindows.wauParityReplay(
@@ -181,18 +168,12 @@ class StatefulSessionsSpec extends SparkSpec {
       val commits = new java.io.File(s"$base/ckpt/commits").list()
         .count(!_.endsWith(".tmp"))
       assert(commits >= 3, s"expected a multi-batch replay, got $commits")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(base))
-    }
+    } finally Scratch.rm(new java.io.File(base))
   }
 
   test("OHLC parity replay equals the batch weekly resample, with " +
     "days genuinely assembled across micro-batches") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_stream_ohlc_").toString
+    val base = Scratch.dir("graft_stream_ohlc_").toString
     try {
       val orders = Tables.orders(spark, sf0)
       val out = graft.streaming.StreamingWindows.ohlcParityReplay(
@@ -207,12 +188,7 @@ class StatefulSessionsSpec extends SparkSpec {
       val commits = new java.io.File(s"$base/ckpt/commits").list()
         .count(!_.endsWith(".tmp"))
       assert(commits >= 3, s"expected a multi-batch replay, got $commits")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(base))
-    }
+    } finally Scratch.rm(new java.io.File(base))
   }
 
   test("watermarked hopping windows: overlapping windows each emit once, " +
@@ -324,8 +300,7 @@ class StatefulSessionsSpec extends SparkSpec {
 
   test("interval join parity replay: cross-batch two-sided state, " +
     "equals the batch inequality join") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_join_parity_").toString
+    val base = Scratch.dir("graft_join_parity_").toString
     try {
       // clicks land in the earliest range files, purchases in the
       // latest: every match REQUIRES the join state to carry the click
@@ -368,18 +343,12 @@ class StatefulSessionsSpec extends SparkSpec {
       assert(rep.collect().toSeq.map(_.toSeq) ==
         batch.collect().toSeq.map(_.toSeq),
         "stream-stream replay diverged from the batch inequality join")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(base))
-    }
+    } finally Scratch.rm(new java.io.File(base))
   }
 
   test("enrich parity replay equals the batch enrichment AND really " +
     "ran as multiple micro-batches") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_enrich_parity_").toString
+    val base = Scratch.dir("graft_enrich_parity_").toString
     try {
       val out = graft.streaming.StreamingEnrich.enrichParityReplay(
         Tables.orders(spark, sf0), Tables.customer(spark, sf0),
@@ -394,11 +363,6 @@ class StatefulSessionsSpec extends SparkSpec {
       val commits = new java.io.File(s"$base/ckpt/commits").list()
         .count(!_.endsWith(".tmp"))
       assert(commits >= 3, s"expected a multi-batch replay, got $commits")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(base))
-    }
+    } finally Scratch.rm(new java.io.File(base))
   }
 }

@@ -8,8 +8,7 @@ class StreamingCdcSpec extends SparkSpec {
 
   test("cdcParityReplay: the streamed latest-wins state equals the " +
     "batch fold — updates win, inserts land, untouched keys survive") {
-    val base = java.nio.file.Files.createTempDirectory("graft_cdc_spec_")
-      .toString
+    val base = Scratch.dir("graft_cdc_spec_").toString
     // keys: 7 (updated), 97 (updated? 97%7 != 0 — inserted twin),
     // 5 (untouched), 14 (updated)
     val orders = Seq((5L, 10L, 1.00), (7L, 20L, 2.00), (14L, 30L, 3.00),
@@ -33,7 +32,7 @@ class StreamingCdcSpec extends SparkSpec {
     // must pick version 2 regardless of iterator order
     val changes = Seq((1L, 2L, 10L, 999L), (1L, 1L, 10L, 111L))
       .toDF("o_orderkey", "version", "o_custkey", "price_cents")
-    val base = java.nio.file.Files.createTempDirectory("graft_cdc_spec2_")
+    val base = Scratch.dir("graft_cdc_spec2_")
       .toString
     changes.write.mode("overwrite").parquet(s"$base/src")
     val stream = spark.readStream

@@ -65,8 +65,7 @@ class StreamingContaminationSpec extends SparkSpec {
 
   test("contamination parity replay: the streamed gate verdicts equal " +
     "the one-batch gate over the whole train split, multi-batch") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_contam_parity_").toString
+    val base = Scratch.dir("graft_contam_parity_").toString
     try {
       val docs = Tables.documents(spark, sf0)
       val out = StreamingContamination.contaminationParityReplay(
@@ -90,11 +89,6 @@ class StreamingContaminationSpec extends SparkSpec {
       val commits = new java.io.File(s"$base/ckpt/commits").list()
         .count(!_.endsWith(".tmp"))
       assert(commits >= 4, s"expected a multi-batch replay, got $commits")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(base))
-    }
+    } finally Scratch.rm(new java.io.File(base))
   }
 }

@@ -21,7 +21,7 @@ class StreamingCorpusSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    Scratch.dir(prefix).toString
 
   // good-quality English-ish text: >50 chars, stopword rate in (0, .5),
   // mean token length in [3, 10], high type-token ratio

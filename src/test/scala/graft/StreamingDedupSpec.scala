@@ -56,11 +56,10 @@ class StreamingDedupSpec extends SparkSpec {
   test("nearDupGate suppresses MinHash near-dups in-batch and cross-batch, " +
     "re-emits past the horizon, state stays bounded") {
     implicit val sqlCtx = spark.sqlContext
-    import java.nio.file.Files
     val mem = MemoryStream[Doc]
-    val store = Files.createTempDirectory("graft_ndg_store_").toString
-    val out = Files.createTempDirectory("graft_ndg_out_").toString
-    val ckpt = Files.createTempDirectory("graft_ndg_ckpt_").toString
+    val store = Scratch.dir("graft_ndg_store_").toString
+    val out = Scratch.dir("graft_ndg_out_").toString
+    val ckpt = Scratch.dir("graft_ndg_ckpt_").toString
 
     // near-dups: one word of ~30 changed (3-gram Jaccard ≈ 0.8, well
     // over the 0.5 gate); distinct docs share no shingles
@@ -127,10 +126,9 @@ class StreamingDedupSpec extends SparkSpec {
   }
 
   test("a store-suppressed doc is not an in-batch suppressor (no cross chains)") {
-    import java.nio.file.Files
     import graft.operators.Dedup
-    val store = Files.createTempDirectory("graft_ndg_chain_store_").toString
-    val out = Files.createTempDirectory("graft_ndg_chain_out_").toString
+    val store = Scratch.dir("graft_ndg_chain_store_").toString
+    val out = Scratch.dir("graft_ndg_chain_out_").toString
     // A stored; batch 1 = {B ~ A (store-suppressed), C ~ B but NOT ~ A}.
     // Near-dup similarity is not transitive: C's only in-batch bucket
     // mate is B, and B will not be emitted — so suppressing C would
@@ -228,8 +226,7 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("exact parity replay: dropDuplicates over a multi-batch file " +
     "replay equals batch DISTINCT, with duplicates spanning batches") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_dedup_parity_").toString
+    val base = Scratch.dir("graft_dedup_parity_").toString
     try {
       // duplicate texts at OPPOSITE ends of the doc_id range: the
       // range split puts them in different micro-batches, so only
@@ -252,36 +249,24 @@ class StreamingDedupSpec extends SparkSpec {
       val commits = new java.io.File(s"$base/ckpt/commits").list()
         .count(!_.endsWith(".tmp"))
       assert(commits >= 3, s"expected a multi-batch replay, got $commits")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(base))
-    }
+    } finally Scratch.rm(new java.io.File(base))
   }
 
   test("exact parity replay: empty corpus yields the empty key table") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_dedup_parity_empty_").toString
+    val base = Scratch.dir("graft_dedup_parity_empty_").toString
     try {
       val docs = Seq.empty[(Long, String)].toDF("doc_id", "text")
       val out = StreamingDedup.exactParityReplay(
         docs, s"$base/src", s"$base/out", s"$base/ckpt", nFiles = 2)
       assert(out.collect().isEmpty)
       assert(out.columns.toSeq == Seq("h", "n_chars"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(base))
-    }
+    } finally Scratch.rm(new java.io.File(base))
   }
 
   test("append-only store: per-batch write volume is O(batch), not " +
     "O(store); compaction folds the manifest when the segment cap bites") {
-    import java.nio.file.Files
-    val store = Files.createTempDirectory("graft_ndg_ao_store_").toString
-    val out = Files.createTempDirectory("graft_ndg_ao_out_").toString
+    val store = Scratch.dir("graft_ndg_ao_store_").toString
+    val out = Scratch.dir("graft_ndg_ao_out_").toString
     // 8 batches of ONE distinct doc each (no shared shingles), horizon
     // far past the span so nothing expires — the store grows to 8 docs
     def doc(i: Int) =
@@ -315,5 +300,153 @@ class StreamingDedupSpec extends SparkSpec {
     val (after, afterSigs) = StreamingDedup.storeContents(spark, store)
     assert(after.select("doc_id").distinct().count() == 9L)
     assert(afterSigs.count() == 9L)
+  }
+
+  // distinct 30-word docs (no shared shingles across seeds) and their
+  // one-word-changed near-dups (3-gram Jaccard ≈ 0.8)
+  private def words(seed: String) = (0 until 30).map(i => s"${seed}w$i")
+  private def distinctDoc(id: Long, minute: Int, seed: String) =
+    Doc(id, ts(f"2024-01-01 00:$minute%02d:00"), words(seed).mkString(" "))
+  private def nearDup(id: Long, minute: Int, seed: String) =
+    Doc(id, ts(f"2024-01-01 00:$minute%02d:00"),
+      (words(seed).dropRight(1) :+ "changed").mkString(" "))
+
+  /** Spark jobs `body` launches, and how many of them ran outside a SQL
+    * execution. A listener counts job starts between two fence jobs, so
+    * every start event of `body` has been delivered when it returns. */
+  private def jobsOf(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val fenceKey = "graft.spec.fence"
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val bare = new java.util.concurrent.atomic.AtomicInteger()
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      @volatile private var open = false
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        props.flatMap(p => Option(p.getProperty(fenceKey))) match {
+          case Some("open") => open = true
+          case Some(_) => closed.countDown()
+          case None if open =>
+            jobs.incrementAndGet()
+            if (props.forall(_.getProperty("spark.sql.execution.id") == null))
+              bare.incrementAndGet()
+          case None => ()
+        }
+      }
+    }
+    def fence(tag: String): Unit = {
+      sc.setLocalProperty(fenceKey, tag)
+      try { sc.parallelize(Seq(1), 1).count(); () }
+      finally sc.setLocalProperty(fenceKey, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("open"); body; fence("close")
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (jobs.get, bare.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("signature-only store: a batch launches the same Spark jobs with 1 " +
+    "live segment as with 5, all inside SQL executions, and a segment " +
+    "holds only sigs") {
+    // one distinct doc per store batch, horizon far past the span
+    def storeWith(segments: Int): (String, String) = {
+      val store = Scratch.dir("graft_ndg_jobs_store_").toString
+      val out = Scratch.dir("graft_ndg_jobs_out_").toString
+      for (i <- 0 until segments)
+        StreamingDedup.nearDupGateBatch(
+          Seq(distinctDoc(i.toLong, i, s"s$i")).toDF(), i.toLong,
+          store, out, 0.5, 100000L, 64, 4, 3)
+      (store, out)
+    }
+    // the probe batch: a near-dup of stored doc 0 plus a fresh doc, so
+    // the store join, the in-batch join and the segment write all run
+    def probe(store: String, out: String): ((Int, Int), Seq[Long]) = {
+      val batch = Seq(nearDup(100L, 30, "s0"), distinctDoc(101L, 31, "fresh"))
+        .toDF().persist()
+      batch.count()
+      val counted = jobsOf(StreamingDedup.nearDupGateBatch(batch, 9L,
+        store, out, 0.5, 100000L, 64, 4, 3))
+      batch.unpersist()
+      (counted, spark.read.parquet(s"$out/batch_id=9").as[Doc]
+        .collect().map(_.doc_id).sorted.toSeq)
+    }
+    val (one, five) = (storeWith(1), storeWith(5))
+    val ((jobs1, bare1), surv1) = probe(one._1, one._2)
+    val ((jobs5, bare5), surv5) = probe(five._1, five._2)
+    assert(surv1 == Seq(101L) && surv5 == Seq(101L),
+      s"near-dup of a stored doc must be suppressed: $surv1 / $surv5")
+    assert(jobs1 == jobs5,
+      s"jobs grew with live segments: $jobs1 with 1, $jobs5 with 5")
+    assert(bare1 == 0 && bare5 == 0,
+      s"jobs outside a SQL execution (schema inference?): $bare1 / $bare5")
+    val m = StreamingDedup.readManifest(spark, five._1, Long.MaxValue)
+    assert(m.map(_.seg) == Seq(0L, 1L, 2L, 3L, 4L, 9L), s"manifest: $m")
+    m.foreach { s =>
+      val halves = new java.io.File(five._1, s"seg=${s.seg}").list().toSet
+      assert(halves == Set("sigs"), s"seg=${s.seg} holds $halves")
+    }
+  }
+
+  test("derived store bands equal Dedup.lshBands of the stored docs' " +
+    "signatures") {
+    import graft.operators.Dedup
+    val store = Scratch.dir("graft_ndg_bands_store_").toString
+    val out = Scratch.dir("graft_ndg_bands_out_").toString
+    val docs = Seq(
+      Seq(distinctDoc(1L, 0, "a"), nearDup(2L, 1, "a"), distinctDoc(3L, 2, "b")),
+      Seq(nearDup(4L, 3, "b"), distinctDoc(5L, 4, "c")))
+    docs.zipWithIndex.foreach { case (b, i) =>
+      StreamingDedup.nearDupGateBatch(b.toDF(), i.toLong, store, out,
+        0.5, 100000L, 64, 4, 3)
+    }
+    val (bands, sigs) = StreamingDedup.storeContents(spark, store)
+    // survivors 1, 3, 5; their signatures recomputed from the texts
+    val expectSigs = Dedup.minHashSignatures(docs.flatten.toDF()
+      .filter(col("doc_id").isin(1L, 3L, 5L)), 3, 64)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map {
+        case a: scala.collection.Seq[_] => a.toList
+        case v => v
+      }).toSet
+    assert(rows(sigs.select("doc_id", "sig")) == rows(expectSigs))
+    val expectBands = Dedup.lshBands(expectSigs, 64, 4)
+    assert(rows(bands.select("doc_id", "band", "bucket")) == rows(expectBands))
+    assert(bands.count() == 3L * 16L)
+  }
+
+  test("a legacy two-half segment (seg=N/{bands,sigs}) gives the same " +
+    "suppressions as a signature-only one") {
+    import graft.operators.Dedup
+    val batch0 = Seq(distinctDoc(1L, 0, "a"), distinctDoc(2L, 1, "b"))
+    val batch1 = Seq(nearDup(3L, 2, "a"), distinctDoc(4L, 3, "c"),
+      nearDup(5L, 4, "b"))
+    def run(legacy: Boolean): Seq[Long] = {
+      val store = Scratch.dir("graft_ndg_legacy_store_").toString
+      val out = Scratch.dir("graft_ndg_legacy_out_").toString
+      StreamingDedup.nearDupGateBatch(batch0.toDF(), 0L, store, out,
+        0.5, 100000L, 64, 4, 3)
+      if (legacy) {
+        // the band half the older layout wrote beside sigs
+        val docs = batch0.toDF()
+        Dedup.lshBands(Dedup.minHashSignatures(docs, 3, 64), 64, 4)
+          .join(docs.select("doc_id", "ts"), "doc_id")
+          .select("doc_id", "ts", "band", "bucket")
+          .write.parquet(s"$store/seg=0/bands")
+      }
+      StreamingDedup.nearDupGateBatch(batch1.toDF(), 1L, store, out,
+        0.5, 100000L, 64, 4, 3)
+      if (legacy)
+        assert(new java.io.File(store, "seg=0").list().toSet ==
+          Set("bands", "sigs"))
+      spark.read.parquet(s"$out/batch_id=1").as[Doc]
+        .collect().map(_.doc_id).sorted.toSeq
+    }
+    val current = run(legacy = false)
+    assert(current == Seq(4L), s"expected only the fresh doc: $current")
+    assert(run(legacy = true) == current)
   }
 }

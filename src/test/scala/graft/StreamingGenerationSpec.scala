@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.StreamingExport
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 
@@ -15,8 +14,8 @@ class StreamingGenerationSpec extends SparkSpec {
 
   test("schema change mid-stream: old generation torn down, both outputs readable") {
     implicit val sqlCtx = spark.sqlContext
-    val out = Files.createTempDirectory("graft_gen_out_").toString
-    val ckpt = Files.createTempDirectory("graft_gen_ckpt_").toString
+    val out = Scratch.dir("graft_gen_out_").toString
+    val ckpt = Scratch.dir("graft_gen_ckpt_").toString
     val exporter = new StreamingExport.GenerationedExport(
       Seq("continent"), out, ckpt)
 
@@ -63,7 +62,7 @@ class StreamingGenerationSpec extends SparkSpec {
 
   test("export parity replay: the streamed conduit lands every event " +
     "exactly once with the batch payload encoding, multi-batch") {
-    val base = Files.createTempDirectory("graft_export_parity_").toString
+    val base = Scratch.dir("graft_export_parity_").toString
     try {
       val events = Tables.events(spark, sf0)
       val out = StreamingExport.exportParityReplay(
@@ -75,11 +74,6 @@ class StreamingGenerationSpec extends SparkSpec {
       val commits = new java.io.File(s"$base/ckpt/commits").list()
         .count(!_.endsWith(".tmp"))
       assert(commits >= 3, s"expected a multi-batch replay, got $commits")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(base))
-    }
+    } finally Scratch.rm(new java.io.File(base))
   }
 }

@@ -63,8 +63,7 @@ class StreamingIngestSpec extends SparkSpec {
 
   test("ingest parity replay: streaming parser over the wire equals " +
     "the batch round-trip summary, multi-batch") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_ingest_parity_").toString
+    val base = Scratch.dir("graft_ingest_parity_").toString
     try {
       val events = Tables.events(spark, sf0)
       val out = StreamingIngest.ingestParityReplay(
@@ -76,11 +75,6 @@ class StreamingIngestSpec extends SparkSpec {
       val commits = new java.io.File(s"$base/ckpt/commits").list()
         .count(!_.endsWith(".tmp"))
       assert(commits >= 3, s"expected a multi-batch replay, got $commits")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(base))
-    }
+    } finally Scratch.rm(new java.io.File(base))
   }
 }

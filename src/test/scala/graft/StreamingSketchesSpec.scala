@@ -67,8 +67,7 @@ class StreamingSketchesSpec extends SparkSpec {
 
   test("kmv parity replay: final per-scope state equals the batch " +
     "bottom-k, multi-batch") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_kmv_parity_").toString
+    val base = Scratch.dir("graft_kmv_parity_").toString
     try {
       val events = Tables.events(spark, sf0)
       val out = StreamingSketches.kmvParityReplay(
@@ -91,11 +90,6 @@ class StreamingSketchesSpec extends SparkSpec {
       val commits = new java.io.File(s"$base/ckpt/commits").list()
         .count(!_.endsWith(".tmp"))
       assert(commits >= 3, s"expected a multi-batch replay, got $commits")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(base))
-    }
+    } finally Scratch.rm(new java.io.File(base))
   }
 }

@@ -67,8 +67,8 @@ class StressSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val mem = MemoryStream[(Long, String)]
-    val out = java.nio.file.Files.createTempDirectory("graft_thr_out_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_thr_ckpt_").toString
+    val out = Scratch.dir("graft_thr_out_").toString
+    val ckpt = Scratch.dir("graft_thr_ckpt_").toString
     val rows = 200000
     mem.addData((0 until rows).map(i =>
       (i.toLong, Seq("EU", "AS", "NA", "SA")(i % 4))))
@@ -376,10 +376,8 @@ class StressSpec extends SparkSpec {
     val emb = emb10
     // train + persist once (what a deployment schedules)
     val t0 = System.nanoTime()
-    val qdir = java.nio.file.Files
-      .createTempDirectory("stress_ivfpq_q_").toString
-    val cdir = java.nio.file.Files
-      .createTempDirectory("stress_ivfpq_c_").toString
+    val qdir = Scratch.dir("stress_ivfpq_q_").toString
+    val cdir = Scratch.dir("stress_ivfpq_c_").toString
     Similarity.saveCentroids(
       Similarity.trainCentroids(Similarity.prepared(emb),
         nlist = 16, iters = 2), qdir)
@@ -464,7 +462,7 @@ class StressSpec extends SparkSpec {
     * their cap policies, not a scale probe. Written as a real parquet
     * dir so the registered keys run UNMODIFIED against it. */
   private lazy val sf1EqDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_sf1eq_").toString
+    val d = Scratch.dir("graft_sf1eq_").toString
     val S = 100000000L
     def x10(df: org.apache.spark.sql.DataFrame, keys: String*) =
       (0 until 10).map(i => keys.foldLeft(df)((acc, c) =>
@@ -499,7 +497,7 @@ class StressSpec extends SparkSpec {
     * ×10 duplication stress (which exists to trip the cap policies),
     * every copy is DISTINCT — the shape a real crawl snapshot has. */
   private lazy val mut10Dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_mut10_").toString
+    val d = Scratch.dir("graft_mut10_").toString
     def w(df: org.apache.spark.sql.DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(Tables.path(d, name))
     Seq("region", "nation", "customer", "supplier", "part", "orders",
@@ -789,8 +787,7 @@ class StressSpec extends SparkSpec {
       concat_ws(" ", (0 until 12).map(i =>
         substring(md5(concat(col("id"), lit(s":$i"))), 1, 8)): _*)
         .as("text"))
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_store10x_").toString
+    val base = Scratch.dir("graft_store10x_").toString
     val staged = graft.streaming.Replay.stage(
       docs.repartitionByRange(10, col("doc_id")), s"$base/src", 10)
     val t0 = System.nanoTime()

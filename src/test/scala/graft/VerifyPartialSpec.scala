@@ -24,8 +24,7 @@ class VerifyPartialSpec extends SparkSpec {
       assert(SparkEntry.queries.contains(k) && SparkEntry.oracleSql.contains(k),
         s"spec fixture key missing from the board: $k")
     }
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_verify_partial_").toString
+    val out = Scratch.dir("graft_verify_partial_").toString
     spark // force the shared session so Verify's getOrCreate reuses it
     System.setProperty("graft.verify.maxKeys", "2")
     try Verify.run(Array(sf0, out) ++ keys, stopSession = false)
