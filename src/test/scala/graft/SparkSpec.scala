@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session per suite: local, UTC, ns-parquet tolerant. */
+/** Shared session per suite, from the factory the mains use. */
 trait SparkSpec extends AnyFunSuite {
   // pin the JVM default zone too: java.sql.Timestamp.valueOf interprets
   // its literal in the JVM zone, so fixture timestamps (and the expected
@@ -11,13 +11,7 @@ trait SparkSpec extends AnyFunSuite {
   // Spark session zone is UTC
   java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSpark.session(cpus = "4")
 
   val sf0: String = "/root/testdata/sf0.001"
 }
