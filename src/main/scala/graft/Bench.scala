@@ -74,9 +74,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * driver kill mid-run overwrote the committed clean mirror with 109
   * phantom "failed" entries; a dirty run can no longer clobber it.
   *
-  * Transient scratch is drained after every timed entry
-  * (SparkEntry.drainTransientScratch) so the stream replays' parquet +
-  * checkpoint state never accumulates across the run.
+  * Every timed entry ends with SparkEntry.endQuery() outside its timed
+  * span, so the stream replays' parquet + checkpoint state never
+  * accumulates across the run.
   */
 object Bench {
   /** 1-minute system load average (VERDICT r18 item 4): stamped into the
@@ -140,7 +140,8 @@ object Bench {
     // its FIRST consumer in the round-robin sequence, or an earlier
     // consumer would pay the build cost (bench misattribution)
     val orderIdx: Map[String, Int] = names.map(_._1).zipWithIndex.toMap
-    val memoFed = SparkEntry.memoFedQueries.filter(q => orderIdx.contains(q))
+    val memoFed = SparkEntry.memoDeps.flatMap(_._2).distinct
+      .filter(orderIdx.contains)
     val floors = readFloors()
 
     def timed(work: () => Unit): (Double, Boolean) = {
@@ -152,8 +153,7 @@ object Bench {
       // cleanup is UNTIMED (ADVICE r17): deleting a stream replay's
       // parquet + checkpoint trees is harness bookkeeping, not query
       // work — charging it to the entry inflated replay keys vs floors
-      SparkEntry.harnessScope.release()
-      SparkEntry.drainTransientScratch()
+      SparkEntry.endQuery()
       (dt, ok)
     }
 
@@ -163,16 +163,15 @@ object Bench {
     // cold JIT — round 10's 9.7 s unigram train read 15.2 s purely
     // from ordering). Budget check between queries: a pathologically
     // slow host skips the tail instead of dying at the external cap.
-    val inScope = SparkEntry.benchMemos.filter {
-      case (_, fed, _, _) => fed.exists(orderIdx.contains)
+    val memoByName = SparkEntry.memos.map(m => m.name -> m).toMap
+    val inScope = SparkEntry.memoDeps.filter {
+      case (_, fed) => fed.exists(orderIdx.contains)
     }
-    inScope.foreach { case (_, _, clear, _) => clear() }
-    val anchor: Map[String, Seq[(String, (SparkSession, String) => Unit)]] =
-      inScope.map { case (entry, fed, _, build) =>
-        (fed.filter(orderIdx.contains).minBy(orderIdx), (entry, build))
+    inScope.foreach { case (memo, _) => memoByName(memo).clear() }
+    val anchor: Map[String, Seq[String]] =
+      inScope.map { case (memo, fed) =>
+        (fed.filter(orderIdx.contains).minBy(orderIdx), memo)
       }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val memoBuilds: Map[String, (() => Unit, (SparkSession, String) => Unit)] =
-      SparkEntry.benchMemos.map { case (e, _, c, b) => (e, (c, b)) }.toMap
 
     val p1 = scala.collection.mutable.ArrayBuffer[(String, Double, Boolean)]()
     val skipped = scala.collection.mutable.ArrayBuffer[String]()
@@ -184,10 +183,10 @@ object Bench {
     names.foreach { case (name, fn) =>
       if (elapsed() > budget) skipped += name
       else {
-        anchor.getOrElse(name, Nil).foreach { case (entry, build) =>
-          val (t, ok) = timed(() => build(spark, sfDir))
-          p1 += ((entry, t, ok))
-          tOff(entry) = elapsed()
+        anchor.getOrElse(name, Nil).foreach { memo =>
+          val (t, ok) = timed(() => { memoByName(memo)(spark, sfDir); () })
+          p1 += ((memo, t, ok))
+          tOff(memo) = elapsed()
         }
         val (t, ok) = timed(() =>
           fn(spark, sfDir).write.format("noop").mode("overwrite").save())
@@ -234,8 +233,8 @@ object Bench {
                         // floored key that already beat 1×
     }
     def rerun(name: String): (Double, Boolean) = {
-      val work: () => Unit = memoBuilds.get(name) match {
-        case Some((clear, build)) => () => { clear(); build(spark, sfDir) }
+      val work: () => Unit = memoByName.get(name) match {
+        case Some(memo) => () => { memo.clear(); memo(spark, sfDir); () }
         case None =>
           val fn = fnByName(name)
           () => fn(spark, sfDir).write.format("noop").mode("overwrite").save()

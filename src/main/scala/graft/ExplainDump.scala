@@ -29,8 +29,7 @@ object ExplainDump {
         } catch { case e: Throwable =>
           println(s"$name FAILED: ${e.getMessage}")
         }
-        SparkEntry.harnessScope.release()
-        SparkEntry.drainTransientScratch()
+        SparkEntry.endQuery()
       }
     spark.stop()
   }

@@ -40,8 +40,7 @@ object Plans {
       } catch { case e: Throwable =>
         println(s"$name FAILED: ${e.getMessage}")
       }
-      SparkEntry.harnessScope.release()
-      SparkEntry.drainTransientScratch()
+      SparkEntry.endQuery()
     }
     spark.stop()
   }

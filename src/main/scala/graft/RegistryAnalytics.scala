@@ -70,7 +70,7 @@ private[graft] trait RegistryAnalytics { this: SparkEntry.type =>
     // watermarked interval join — two-sided state under the oracle
     // (see intervalParityReplay's scaladoc).
     "stream_join_parity" -> ((s, d) => {
-      val base = scratchDirTransient("graft_stream_join_")
+      val base = queryDir("stream_join")
       graft.streaming.StreamingJoin.intervalParityReplay(
         Tables.events(s, d), s"$base/src", s"$base/out", s"$base/ckpt",
         nFiles = 3)
@@ -81,7 +81,7 @@ private[graft] trait RegistryAnalytics { this: SparkEntry.type =>
     // call per batch against the pre-joined dim snapshot, under
     // join_enrich's own oracle (see enrichParityReplay's scaladoc).
     "stream_enrich_parity" -> ((s, d) => {
-      val base = scratchDirTransient("graft_stream_enrich_")
+      val base = queryDir("stream_enrich")
       graft.streaming.StreamingEnrich.enrichParityReplay(
         Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d),
         Tables.region(s, d), s"$base/src", s"$base/out", s"$base/ckpt",
@@ -99,7 +99,7 @@ private[graft] trait RegistryAnalytics { this: SparkEntry.type =>
     // function of the key (see exactParityReplay's scaladoc for the
     // arrival-order reasoning).
     "stream_dedup_parity" -> ((s, d) => {
-      val base = scratchDirTransient("graft_stream_dedup_")
+      val base = queryDir("stream_dedup")
       graft.streaming.StreamingDedup.exactParityReplay(
         Tables.documents(s, d), s"$base/src", s"$base/out", s"$base/ckpt",
         nFiles = 3)
@@ -110,7 +110,7 @@ private[graft] trait RegistryAnalytics { this: SparkEntry.type =>
     // any micro-batch slicing converges; final state per key from its
     // largest committed batch (see cdcParityReplay's scaladoc).
     "stream_cdc_parity" -> ((s, d) => {
-      val base = scratchDirTransient("graft_stream_cdc_")
+      val base = queryDir("stream_cdc")
       graft.streaming.StreamingCdc.cdcParityReplay(
         Tables.orders(s, d), s"$base/src", s"$base/out", s"$base/ckpt",
         nFiles = 3)
@@ -969,7 +969,7 @@ private[graft] trait RegistryAnalytics { this: SparkEntry.type =>
     // extraction across micro-batches + the shared batch tail (see
     // StreamingWindows.wauParityReplay's scaladoc).
     "stream_wau_parity" -> ((s, d) => {
-      val base = scratchDirTransient("graft_stream_wau_")
+      val base = queryDir("stream_wau")
       graft.streaming.StreamingWindows.wauParityReplay(
         Tables.events(s, d), s"$base/src", s"$base/out", s"$base/ckpt",
         nFiles = 3)
@@ -985,7 +985,7 @@ private[graft] trait RegistryAnalytics { this: SparkEntry.type =>
     // aggregation in complete mode + the shared gap-fill/resample tail
     // (see StreamingWindows.ohlcParityReplay's scaladoc).
     "stream_ohlc_parity" -> ((s, d) => {
-      val base = scratchDirTransient("graft_stream_ohlc_")
+      val base = queryDir("stream_ohlc")
       graft.streaming.StreamingWindows.ohlcParityReplay(
         Tables.orders(s, d), s"$base/src", s"$base/out", s"$base/ckpt",
         nFiles = 3)
@@ -1362,7 +1362,7 @@ private[graft] trait RegistryAnalytics { this: SparkEntry.type =>
     // the SAME oracle as the batch key (see tumblingParityReplay's
     // scaladoc for the complete-vs-append reasoning).
     "stream_window_parity" -> ((s, d) => {
-      val base = scratchDirTransient("graft_stream_win_")
+      val base = queryDir("stream_win")
       // nFiles = 3 (r18, VERDICT item 1): each micro-batch carries
       // fixed scheduler + state-commit overhead, so the replay cost is
       // ~linear in batch count — 3 data batches keep the cross-batch
@@ -1393,7 +1393,7 @@ private[graft] trait RegistryAnalytics { this: SparkEntry.type =>
     // stream with an end-of-stream flush, under the SAME oracle as the
     // batch key (see sessionizeParityReplay's scaladoc).
     "stream_sessionize_parity" -> ((s, d) => {
-      val base = scratchDirTransient("graft_stream_sess_")
+      val base = queryDir("stream_sess")
       graft.streaming.StatefulSessions.sessionizeParityReplay(
         Tables.events(s, d), s"$base/src", s"$base/out", s"$base/ckpt",
         nFiles = 3)

@@ -11,6 +11,23 @@ import org.apache.spark.sql.functions._
   * unchanged, SparkEntry.queries/oracleSql concatenate the families). */
 private[graft] trait RegistryConduit { this: SparkEntry.type =>
 
+  // ---- serve dirs (see SessionArtifacts): written once per data dir and
+  // read by every invocation of their key
+
+  /** The one-blob-per-doc witness directory read by source_binary_files
+    * (round 18, VERDICT r17 item 6): in production the blob directory IS
+    * the input, so the measured plan is the binaryFile read, not a
+    * 500-tiny-file filesystem exercise per bench pass. */
+  private[graft] val binaryBlobDir = serveDir("blob_dir") { (s, d, dir) =>
+    graft.sources.TextSources.writeBlobDir(s, Tables.documents(s, d), dir)
+  }
+
+  /** The z-ordered orders layout (`layout/`) and its skipping index
+    * (`layout_idx/`) read by layout_zorder_read. */
+  private[graft] val zorderLayoutDir = serveDir("zorder") { (s, d, dir) =>
+    ExportPipeline.zorderWrite(s, Tables.orders(s, d), s"$dir/layout")
+  }
+
   protected def conduitQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- Group A: faithful export-conduit surface -----------------------
@@ -210,7 +227,7 @@ private[graft] trait RegistryConduit { this: SparkEntry.type =>
     // streaming parser, landed per batch, summarized with the shared
     // fidelity reduction (see ingestParityReplay's scaladoc).
     "stream_ingest_parity" -> ((s, d) => {
-      val base = scratchDirTransient("graft_stream_ingest_")
+      val base = queryDir("stream_ingest")
       graft.streaming.StreamingIngest.ingestParityReplay(
         Tables.events(s, d), s"$base/src", s"$base/out", s"$base/ckpt",
         nFiles = 3)
@@ -266,12 +283,7 @@ private[graft] trait RegistryConduit { this: SparkEntry.type =>
     // the blob directory IS the input — so the measured plan is the
     // binaryFile read (see binaryFilesReadFrom's scaladoc).
     "source_binary_files" -> ((s, d) => {
-      val dir = binaryBlobDirs.computeIfAbsent(d, _ => {
-        val tmp = scratchDir("graft_blob_dir_")
-        graft.sources.TextSources.writeBlobDir(s, Tables.documents(s, d), tmp)
-        tmp
-      })
-      graft.sources.TextSources.binaryFilesReadFrom(s, dir)
+      graft.sources.TextSources.binaryFilesReadFrom(s, binaryBlobDir(s, d))
     }),
 
     // Hive-partitioned layout + partition pruning (round 14): the
@@ -320,7 +332,7 @@ private[graft] trait RegistryConduit { this: SparkEntry.type =>
     // under sink_txn_batch's oracle (see exportParityReplay's
     // scaladoc).
     "stream_export_parity" -> ((s, d) => {
-      val base = scratchDirTransient("graft_stream_export_")
+      val base = queryDir("stream_export")
       graft.streaming.StreamingExport.exportParityReplay(
         Tables.events(s, d), s"$base/src", s"$base/out", s"$base/ckpt",
         nFiles = 3)
@@ -333,7 +345,7 @@ private[graft] trait RegistryConduit { this: SparkEntry.type =>
     // oracle is shared verbatim (see exportExactlyOnceReplay's
     // scaladoc).
     "stream_export_exactly_once" -> ((s, d) => {
-      val base = scratchDirTransient("graft_stream_export_eo_")
+      val base = queryDir("stream_export_eo")
       graft.streaming.StreamingExport.exportExactlyOnceReplay(
         Tables.events(s, d), s"$base/src", s"$base/out", s"$base/ckpt",
         nFiles = 3, replayBatch = 1L)
@@ -389,12 +401,8 @@ private[graft] trait RegistryConduit { this: SparkEntry.type =>
     // PlanInvariantsSpec asserts the partition pruning is real; the
     // oracle proves the pruned read returns EXACTLY the predicate rows.
     "layout_zorder_read" -> ((s, d) => {
-      val dir = zorderLayoutDirs.computeIfAbsent(d, _ => {
-        val tmp = scratchDir("graft_zorder_") + "/layout"
-        ExportPipeline.zorderWrite(s, Tables.orders(s, d), tmp)
-        tmp
-      })
-      ExportPipeline.zorderPrunedRead(s, dir, 1L, 300L)
+      ExportPipeline.zorderPrunedRead(s, s"${zorderLayoutDir(s, d)}/layout",
+        1L, 300L)
     }),
 
     // A15 conn_pool: LRU+TTL endpoint-cache state.

@@ -326,7 +326,7 @@ private[graft] trait RegistryCorpusText { this: SparkEntry.type =>
     // stateless streaming face under the full oracle (see
     // contaminationParityReplay's scaladoc).
     "stream_contamination_parity" -> ((s, d) => {
-      val base = scratchDirTransient("graft_stream_contam_")
+      val base = queryDir("stream_contam")
       graft.streaming.StreamingContamination.contaminationParityReplay(
         Tables.documents(s, d), s"$base/src", s"$base/out", s"$base/ckpt",
         nFiles = 3)
@@ -340,7 +340,7 @@ private[graft] trait RegistryCorpusText { this: SparkEntry.type =>
     // (see corpusParityReplay's scaladoc). Closes the last spec-only
     // streaming module.
     "stream_corpus_parity" -> ((s, d) => {
-      val base = scratchDirTransient("graft_stream_corpus_")
+      val base = queryDir("stream_corpus")
       graft.streaming.StreamingCorpus.corpusParityReplay(
         Tables.documents(s, d), s"$base/src", s"$base/store",
         s"$base/out", s"$base/ckpt", nFiles = 3)
@@ -353,7 +353,7 @@ private[graft] trait RegistryCorpusText { this: SparkEntry.type =>
     // drops nothing it shouldn't; the horizon-bites direction is
     // spec-tested (see corpusCompactReplay's scaladoc).
     "stream_corpus_compact" -> ((s, d) => {
-      val base = scratchDirTransient("graft_stream_compact_")
+      val base = queryDir("stream_compact")
       graft.streaming.StreamingCorpus.corpusCompactReplay(
         Tables.documents(s, d), s"$base/src", s"$base/store",
         s"$base/out", s"$base/ckpt", nFiles = 3)
@@ -446,7 +446,7 @@ private[graft] trait RegistryCorpusText { this: SparkEntry.type =>
     // scope vs the batch bottom-k replay (see kmvParityReplay's
     // scaladoc) — order-insensitive state pinned to the oracle.
     "stream_sketch_parity" -> ((s, d) => {
-      val base = scratchDirTransient("graft_stream_kmv_")
+      val base = queryDir("stream_kmv")
       graft.streaming.StreamingSketches.kmvParityReplay(
         Tables.events(s, d), s"$base/src", s"$base/out", s"$base/ckpt",
         nFiles = 3)

@@ -143,8 +143,7 @@ object Verify {
         }
         done += 1
       }
-      SparkEntry.harnessScope.release()
-      SparkEntry.drainTransientScratch()
+      SparkEntry.endQuery()
     }
     if (stopSession) spark.stop()
   }

@@ -4,7 +4,6 @@ import graft.operators.ExportPipeline
 import graft.streaming.StreamingExport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 /** End-to-end usage example: the export conduit driven as a real
   * Structured Streaming job over the events parquet (file stream source →
@@ -28,8 +27,8 @@ object ExportDemo {
       .option("pathGlobFilter", "events.parquet")
       .parquet(sfDir)
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val out = Files.createTempDirectory("graft_demo_out_").toString
-    val ckpt = Files.createTempDirectory("graft_demo_ckpt_").toString
+    val out = graft.Scratch.dir("graft_demo_out_").toString
+    val ckpt = graft.Scratch.dir("graft_demo_ckpt_").toString
     // the reference user's call sequence: configure properties → export
     val cfg = graft.GraftExportClient.configure(Map(
       "hive.uri" -> "thrift://meta:9083",
@@ -47,7 +46,7 @@ object ExportDemo {
     import spark.implicits._
     val odd = Seq((1L, "EU"), (2L, null.asInstanceOf[String]), (3L, "\t"),
       (4L, " \n "), (5L, "")).toDF("id", "region")
-    val oddOut = Files.createTempDirectory("graft_demo_odd_").toString
+    val oddOut = graft.Scratch.dir("graft_demo_odd_").toString
     ExportPipeline.writeRouted(ExportPipeline.route(odd, Seq("region")), oddOut)
     val dirs = new java.io.File(oddOut).listFiles().filter(_.isDirectory)
       .map(_.getName).sorted

@@ -104,10 +104,7 @@ class EmptyInputSpec extends SparkSpec {
     def shape(name: String, dir: String): Seq[(String, String)] =
       try SparkEntry.queries(name)(spark, dir).schema.fields.toSeq
         .map(f => f.name -> f.dataType.catalogString)
-      finally {
-        SparkEntry.harnessScope.release()
-        SparkEntry.drainTransientScratch()
-      }
+      finally SparkEntry.endQuery()
     val mismatches = streamKeys.flatMap { name =>
       val (empty, real) = (shape(name, emptyDir), shape(name, sf0))
       if (empty == real) None else Some(s"$name: empty $empty vs $real")
@@ -123,13 +120,13 @@ class EmptyInputSpec extends SparkSpec {
           val n = fn(spark, emptyDir).count()
           // aggregates without grouping legitimately return a constant
           // row (counts of zero, null mins) — anything else must be empty
-          SparkEntry.harnessScope.release()
+          SparkEntry.endQuery()
           if (n > 1 && !configDerived(name))
             Some(s"$name returned $n rows on empty input")
           else None
         } catch {
           case e: Throwable =>
-            SparkEntry.harnessScope.release()
+            SparkEntry.endQuery()
             Some(s"$name threw ${e.getClass.getSimpleName}: " +
               s"${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString}")
         }

@@ -41,7 +41,7 @@ class MemoDepsSpec extends SparkSpec {
         if (read != want)
           bad += s"$k: read ${read.toSeq.sorted.mkString(",")} vs " +
             s"declared ${want.toSeq.sorted.mkString(",")}"
-      } finally SparkEntry.harnessScope.release()
+      } finally SparkEntry.endQuery()
     }
     assert(bad.isEmpty,
       s"memo-dependency declaration out of sync:\n${bad.mkString("\n")}")

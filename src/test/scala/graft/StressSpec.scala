@@ -542,7 +542,7 @@ class StressSpec extends SparkSpec {
       ("memo:near_dup_pairs",
         dd => SparkEntry.nearDupPairsShared(spark, dd).count()))
     def pass(dir: String, parts: String): Map[String, Double] = {
-      SparkEntry.benchMemos.foreach(_._3())
+      SparkEntry.clearMemos()
       val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       try {
@@ -555,7 +555,7 @@ class StressSpec extends SparkSpec {
         keys.foreach { k =>
           val t0 = System.nanoTime()
           val n = SparkEntry.queries(k)(spark, dir).count()
-          SparkEntry.harnessScope.release()
+          SparkEntry.endQuery()
           out(k) = (System.nanoTime() - t0) / 1e9
           assert(n > 0, s"$k returned no rows against $dir")
         }
@@ -570,7 +570,7 @@ class StressSpec extends SparkSpec {
     val pairs = graft.operators.Dedup
       .minHashNearDupPairs(Tables.documents(spark, mut10Dir),
         scope = SparkEntry.harnessScope).count()
-    SparkEntry.harnessScope.release()
+    SparkEntry.endQuery()
     info(f"mut10 minhash pairs: $pairs%d over ${nDocs * 10}%d docs " +
       f"(${pairs.toDouble / nDocs}%.1f per original doc)")
     assert(pairs >= nDocs,
@@ -615,7 +615,7 @@ class StressSpec extends SparkSpec {
         keys.foreach { k =>
           val t0 = System.nanoTime()
           val n = SparkEntry.queries(k)(spark, dir).count()
-          SparkEntry.harnessScope.release()
+          SparkEntry.endQuery()
           out(k) = (System.nanoTime() - t0) / 1e9
           assert(n > 0, s"$k returned no rows against $dir")
         }
@@ -663,7 +663,7 @@ class StressSpec extends SparkSpec {
     // one timed pass over memos + keys against `dir`; memos cleared
     // first so an earlier suite test can't have pre-paid a build
     def pass(dir: String, parts: String): Map[String, Double] = {
-      SparkEntry.benchMemos.foreach(_._3())
+      SparkEntry.clearMemos()
       val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       try {
@@ -677,7 +677,7 @@ class StressSpec extends SparkSpec {
         keys.foreach { k =>
           val t0 = System.nanoTime()
           val n = SparkEntry.queries(k)(spark, dir).count()
-          SparkEntry.harnessScope.release()
+          SparkEntry.endQuery()
           out(k) = (System.nanoTime() - t0) / 1e9
           assert(n > 0, s"$k returned no rows against $dir")
         }
