@@ -333,7 +333,6 @@ object Dedup {
     * [[nearDupClusters]] for the full algorithm and scale notes. */
   def connectedComponents(pairRelation: DataFrame,
                           maxIters: Int = 20,
-                          labelPartitions: Option[Int] = None,
                           smallGraphEdgeCap: Long = 100000L): DataFrame = {
     val Seq(ca, cb) = pairRelation.columns.toSeq.take(2).map(col)
     // normalize endpoints up front so BOTH physical paths see the same
@@ -348,8 +347,8 @@ object Dedup {
     // the edge — a wrong clustering, not an error).
     val pairs = pairRelation
       .filter(ca.isNotNull && cb.isNotNull)
-      .select(ca.cast("long").as("doc_a"), cb.cast("long").as("doc_b"))
-      .filter(assert_true(col("doc_a").isNotNull && col("doc_b").isNotNull,
+      .select(ca.cast("long").as("a"), cb.cast("long").as("b"))
+      .filter(assert_true(col("a").isNotNull && col("b").isNotNull,
         lit("connectedComponents: node id not castable to long")).isNull)
     // SMALL-GRAPH FAST PATH: a thresholded near-dup graph is usually a
     // sliver of the corpus — often a few thousand edges even at large
@@ -390,90 +389,49 @@ object Dedup {
         return labeled.toDF("node", "lbl")
       }
     }
-    val edges = pairs
-      .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst")
-      // round 19 (guide §2.4): every propagation round joins this
-      // relation on src — cache it already hash-partitioned by src
-      // (InMemoryRelation preserves outputPartitioning), so each
-      // round's neighbor-min join re-shuffles only the label frame,
-      // not the edges
-      .repartition(col("src"))
+    // every propagation round joins this relation on src — cache it
+    // already hash-partitioned by src (InMemoryRelation preserves
+    // outputPartitioning), so each round's neighbor-min join re-shuffles
+    // only the label frame, not the edges
+    val edges = GraphLoops.bothWays(pairs).repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // label-frame parallelism: by default AQE sizes the per-round
-      // shuffle by bytes (small graphs coalesce to few tasks, a
-      // billion-vertex near-dup graph spreads over the cluster) — the
-      // previous fixed coalesce(8) was a parallelism CEILING at scale.
-      // An explicit labelPartitions forces that width instead (callers
-      // that know the graph is huge and want to skip AQE's ramp-up).
-      val reshape: DataFrame => DataFrame = labelPartitions match {
-        case Some(n) => df => df.repartition(n)
-        case None => identity
-      }
-      def labelSum(l: DataFrame): java.math.BigDecimal =
-        // empty vertex set (no pairs at all) sums to null -> ZERO, which
-        // converges on the first round as it must
-        Option(l.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0))
-          .getOrElse(java.math.BigDecimal.ZERO)
       // the loop runs over the pair graph's VERTICES only — in a real
       // corpus the near-dup graph is a sliver of the doc count, and only
       // its vertices can ever change labels; the singleton majority is
-      // attached at the end with one left join (coalesce to self-label)
+      // attached at the end with one left join (coalesce to self-label).
+      // The label frame is |graph vertices| rows and AQE sizes its
+      // per-round shuffle by bytes, so task overhead tracks the graph.
       //
-      // round 20 (guide §5, VERDICT r19 item 8): ONE job per step — the
-      // localCheckpoint is LAZY and the convergence sum's aggregation is
-      // the action that materializes it, so the old shape's separate
-      // checkpoint job (plus a third sum job every two steps) collapses
-      // into the probe itself. With the sum now free every step, the
-      // fixpoint is detected per STEP: labels only ever decrease, so an
-      // unchanged exact decimal sum across one step means that step
-      // moved nothing — the map is already the fixpoint the old
-      // two-step probe stopped at, reached with fewer propagation jobs.
-      var labels = edges.select(col("src").as("node")).distinct()
-        .withColumn("lbl", col("node"))
-        .localCheckpoint(eager = false)
-      var prevSum = labelSum(labels)
-      var it = 0
-      var converged = false
-      while (!converged && it < maxIters) {
-        {
-          // neighbor-min WITHOUT a union (a union of the label frame with
-          // a join over itself trips Catalyst's union constraint rewrite):
-          // min over incoming neighbor labels, then least() with the own
-          // label — identical result, plain join+aggregate plan. Every
-          // vertex is a dst of some edge (edges are symmetric), so the
-          // left join is total; coalesce guards regardless.
-          val neighborMin = edges.join(labels, col("src") === col("node"))
-            .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
-          val stepped = labels.join(neighborMin, col("node") === col("dst"), "left")
-            .select(col("node"),
-              least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-          // pointer jump: follow the stepped label through the previous
-          // step's label map. Every label is a vertex id of the same
-          // component, so the hop stays in-component and only decreases —
-          // compressing chain diameters to O(log d) rounds.
-          val jumped = stepped.as("x")
-            .join(labels.select(col("node").as("jn"), col("lbl").as("jl")),
-              col("x.lbl") === col("jn"), "left")
-            .select(col("x.node").as("node"),
-              coalesce(col("jl"), col("x.lbl")).as("lbl"))
-          // the label frame is |graph vertices| rows — small next to the
-          // corpus; AQE (or the explicit override) sizes its partitions,
-          // so per-round task overhead tracks the graph, never a fixed cap
-          labels = reshape(jumped).localCheckpoint(eager = false)
-          it += 1
-        }
-        val s = labelSum(labels)
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIters rounds — " +
-            "component diameter exceeds the cap; raise maxIters or use a " +
-            "star-contraction formulation for this graph")
-      labels
+      // The convergence probe is the exact decimal label sum (an empty
+      // vertex set sums to null, which converges on the first step):
+      // labels only ever decrease, so an unchanged sum across one step
+      // means that step moved nothing — the fixpoint.
+      val labelSum = GraphLoops.Probe("connectedComponents", l =>
+        l.agg(sum(col("lbl").cast("decimal(38,0)"))).head().get(0))
+      GraphLoops.supersteps(edges.select(col("src").as("node")).distinct()
+          .withColumn("lbl", col("node")), maxIters, Some(labelSum)) { labels =>
+        // neighbor-min WITHOUT a union (a union of the label frame with
+        // a join over itself trips Catalyst's union constraint rewrite):
+        // min over incoming neighbor labels, then least() with the own
+        // label — identical result, plain join+aggregate plan. Every
+        // vertex is a dst of some edge (edges are symmetric), so the
+        // left join is total; coalesce guards regardless.
+        val neighborMin = edges.join(labels, col("src") === col("node"))
+          .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
+        val stepped = labels.join(neighborMin, col("node") === col("dst"), "left")
+          .select(col("node"),
+            least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
+        // pointer jump: follow the stepped label through the previous
+        // step's label map. Every label is a vertex id of the same
+        // component, so the hop stays in-component and only decreases —
+        // compressing chain diameters to O(log d) rounds.
+        stepped.as("x")
+          .join(labels.select(col("node").as("jn"), col("lbl").as("jl")),
+            col("x.lbl") === col("jn"), "left")
+          .select(col("x.node").as("node"),
+            coalesce(col("jl"), col("x.lbl")).as("lbl"))
+      }.last
     } finally edges.unpersist(blocking = false)
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.GraphLoops._
 
 /** Graph analytics over the order co-occurrence graph — the relational
   * face of graph compute, rounding out the engine's graph family next to
@@ -57,13 +58,10 @@ object Graph {
     * ordered. */
   def degreeDistribution(lineitem: DataFrame,
                          edges0: Option[DataFrame] = None): DataFrame = {
-    val und = edges0.getOrElse(coOrderEdges(lineitem))
-    val ends = und.select(col("a").as("node"))
-      .unionByName(und.select(col("b").as("node")))
-    val deg = ends.groupBy(col("node")).agg(count(lit(1)).as("degree"))
+    val deg = nodeDegrees(edges0.getOrElse(coOrderEdges(lineitem)))
     lineitem.select(col("l_partkey").as("node")).distinct()
       .join(deg, Seq("node"), "left")
-      .select(coalesce(col("degree"), lit(0L)).as("degree"))
+      .select(coalesce(col("deg"), lit(0L)).as("degree"))
       .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
       .orderBy(col("degree"))
   }
@@ -99,16 +97,12 @@ object Graph {
     // deployed shape: one edge table, many graph consumers) — the
     // caller owns its lifecycle, so it is not re-tracked here.
     val und = edges0.getOrElse(scope.track(coOrderEdges(lineitem)))
-    // directed both ways for contribution routing. Round 19 (guide
-    // §2.4): the degree rollup AND every unrolled iteration key this
-    // relation by src — materialize it once already hash-partitioned
-    // by src (localCheckpoint preserves outputPartitioning), so the
-    // degree aggregation and the per-iteration contribution joins all
-    // reuse one exchange instead of re-shuffling the edges each time.
-    val edges = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint()
+    // directed both ways for contribution routing: the degree rollup
+    // AND every unrolled iteration key this relation by src, so it is
+    // materialized once already hash-partitioned by src
+    // (localCheckpoint preserves outputPartitioning) and none of them
+    // re-shuffles the edges.
+    val edges = bothWays(und).repartition(col("src")).localCheckpoint()
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // The node universe feeds the teleport-denominator count, the rank
     // seed AND every iteration's contrib branch — and the fold
@@ -180,12 +174,11 @@ object Graph {
           greatest(col("x"), col("y")).as("b")))).as("ed"))
       .select(col("ed.a").as("a"), col("ed.b").as("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("cn"))
-    val deg = e.select(col("a").as("n")).unionByName(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
+    val deg = nodeDegrees(e)
     e.join(cn, Seq("a", "b"), "left")
-      .join(broadcast(deg.select(col("n").as("a"), col("deg").as("da"))),
+      .join(broadcast(deg.select(col("node").as("a"), col("deg").as("da"))),
         Seq("a"))
-      .join(broadcast(deg.select(col("n").as("b"), col("deg").as("db"))),
+      .join(broadcast(deg.select(col("node").as("b"), col("deg").as("db"))),
         Seq("b"))
       .select(col("a"), col("b"), coalesce(col("cn"), lit(0L)).as("cn"),
         (col("da") + col("db") - 2 -
@@ -267,9 +260,7 @@ object Graph {
     val cnt = tri.select(explode(array(col("x"), col("y"), col("z")))
         .as("part"))
       .groupBy(col("part")).agg(count(lit(1)).as("n_triangles"))
-    val deg = e.select(col("a").as("part"))
-      .unionByName(e.select(col("b").as("part")))
-      .groupBy(col("part")).agg(count(lit(1)).as("degree"))
+    val deg = nodeDegrees(e).select(col("node").as("part"), col("deg").as("degree"))
     deg.filter(col("degree") >= 2)
       .join(cnt, Seq("part"), "left")
       .select(col("part"), col("degree"),
@@ -372,19 +363,15 @@ object Graph {
   private[graft] def labelPropLabels(lineitem: DataFrame,
       und: DataFrame, iters: Int = LabelPropIters): DataFrame = {
     require(iters >= 1 && iters <= 4, s"iters must be 1..4, got $iters")
-    // round 20 (VERDICT r19 item 1): round 19 materialized this
-    // relation EAGERLY (repartition + localCheckpoint) — an extra
-    // build job whose shuffle+write cost more than the per-superstep
-    // edge exchanges it saved (memo:lpa_labels regressed 5.7 → 7.2 s).
     // The whole `iters`-superstep fold is ONE lazy plan (the memo
-    // wrapper's single checkpoint action evaluates it), so an explicit
+    // wrapper's single checkpoint action evaluates it), so a lazy
     // hash-repartition by src is enough: every superstep's edge join
     // keys on the identical exchange subtree and ReuseExchange dedupes
-    // it — the edges shuffle ONCE per build, inside the consuming job,
-    // with no eager materialization pass (guide §2.4).
-    val edges = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-      .repartition(col("src"))
+    // it — the edges shuffle ONCE per build, inside the consuming job.
+    // Materializing them eagerly instead costs an extra build job whose
+    // shuffle and write outweigh the exchanges it saves (measured:
+    // memo:lpa_labels 5.7 → 7.2 s).
+    val edges = bothWays(und).repartition(col("src"))
     // universe = part universe ∪ edge endpoints: in production the
     // endpoints are a subset of the parts (no change), but a caller
     // supplying a standalone edge relation (the stress specs do) must
@@ -395,12 +382,12 @@ object Graph {
       .distinct()
     val l0 = nodes.select(col("node"), col("node").as("lbl"))
     (1 to iters).foldLeft(l0) { (l, step) =>
-      // round 20 (guide §2.4): superstep 1's edge×label join is a pure
-      // RENAME — the initial labels are the identity map over a node
-      // universe that contains every edge endpoint by construction
-      // (three lines up), so nlbl = src for every joined row. Skipping
-      // the join drops one full-edge-width join from the build; later
-      // supersteps (labels no longer identity) join as before.
+      // superstep 1's edge×label join is a pure RENAME — the initial
+      // labels are the identity map over a node universe that contains
+      // every edge endpoint by construction (three lines up), so nlbl =
+      // src for every joined row. Skipping the join drops one
+      // full-edge-width join from the build; later supersteps (labels
+      // no longer identity) join as before.
       val neigh =
         if (step == 1) edges.select(col("dst"), col("src").as("nlbl"))
         else edges
@@ -497,23 +484,18 @@ object Graph {
     require(k >= 1 && rounds >= 1 && rounds <= 16,
       s"bad geometry k=$k rounds=$rounds")
     val und0 = edges0.getOrElse(coOrderEdges(lineitem)).select(col("a"), col("b"))
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("a").as("node"))
-        .unionByName(e.select(col("b").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val eFinal = (1 to rounds).foldLeft(und0) { (e, _) =>
-      val keep = degrees(e).filter(col("deg") >= k).select(col("node"))
+    val core = nodeDegrees(supersteps(und0, rounds) { e =>
+      val keep = nodeDegrees(e).filter(col("deg") >= k).select(col("node"))
       e.join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-        .localCheckpoint()
-    }
+    }.last)
     // convergence gate: one more peel must remove nothing. The assert
     // rides a FILTER (the connPoolState discipline — a projected gate
     // column would be pruned away and never evaluate).
-    val wouldPeel = degrees(eFinal).filter(col("deg") < k)
+    val wouldPeel = core.filter(col("deg") < k)
       .agg(count(lit(1)).as("n_unpeeled"))
-    degrees(eFinal)
+    core
       .crossJoin(broadcast(wouldPeel))
       .filter(assert_true(col("n_unpeeled") === 0L,
         concat(lit(s"k-core did not converge in $rounds rounds: "),
@@ -549,8 +531,7 @@ object Graph {
   def assortativity(lineitem: DataFrame,
                     edges0: Option[DataFrame] = None): DataFrame = {
     val und = edges0.getOrElse(coOrderEdges(lineitem))
-    val directed = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+    val directed = bothWays(und)
     val deg = directed.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     directed
       .join(deg, "src")
@@ -589,51 +570,22 @@ object Graph {
     * everything and the layer structure is vacuous; thresholding is
     * also what a real influence pass does) from the md5-'00' node
     * sample (~1/256 — the doc_sample doctrine, engine-replayable).
-    * Fixed `rounds` unroll (the Pregel superstep expressed
-    * relationally, like pageRank): each round is one semi-join
-    * frontier expansion + one anti-join dedup against the visited
-    * set, both equi-joins on the node key — the frontier/visited
-    * frames are node-bounded and localCheckpoint keeps the chain
-    * linear. Output: (depth, n_nodes) for depths 0..rounds with
+    * Fixed `rounds` unroll of the shared frontier BFS
+    * ([[GraphLoops.bfs]]) with the whole seed sample as one class:
+    * each round is one frontier expansion + one anti-join dedup
+    * against the visited set, over node-bounded checkpointed layers.
+    * Output: (depth, n_nodes) for depths 0..rounds with
     * −1 = unreached (structural — the unreached mass is the number an
     * influence analyst reads first), ordered. */
   def bfsLayers(lineitem: DataFrame, rounds: Int = 6, minWeight: Long = 2L,
                 edges0: Option[DataFrame] = None): DataFrame = {
-    require(rounds >= 1 && rounds <= 16, s"bad rounds=$rounds")
-    val e0 = edges0.getOrElse(coOrderEdges(lineitem))
-      .filter(col("w") >= minWeight).select(col("a"), col("b"))
-    // round 20 (guide §2.4 + §5, VERDICT r19 item 4): materialize the
-    // strong-tie directed relation ONCE, hash-partitioned by the
-    // frontier-join key (localCheckpoint preserves outputPartitioning —
-    // the pageRank r19 pattern), instead of re-deriving it from the
-    // edge memo every round; at scale, where the frontier is too big to
-    // broadcast, each round's semi-join then shuffles only the frontier.
-    val und = e0.unionByName(
-      e0.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("a"))
-      .localCheckpoint()
-    val nodes = lineitem.select(col("l_partkey").as("node")).distinct()
-    val seeds = nodes.filter(
-      substring(md5(col("node").cast("string")), 1, 2) === "00")
-    // round 20 (guide §5): ONE materialization job per round, not two —
-    // each round checkpoints only its NEW layer; the visited set the
-    // anti-join reads is the lazy union of the ≤ rounds checkpointed
-    // layer frames (cheap LogicalRDD scans), so the old per-round
-    // re-materialization of the whole visited prefix is gone.
-    var visited = seeds.select(col("node"), lit(0L).as("depth"))
-      .localCheckpoint()
-    var frontier = visited.select(col("node"))
-    for (d <- 1 to rounds) {
-      val next = und
-        .join(frontier.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
-        .select(col("b").as("node")).distinct()
-        .join(visited.select(col("node")), Seq("node"), "left_anti")
-        .select(col("node"), lit(d.toLong).as("depth"))
-        .localCheckpoint()
-      visited = visited.unionByName(next)
-      frontier = next.select(col("node"))
-    }
-    nodes.join(visited, Seq("node"), "left")
+    // the whole seed sample is ONE class: a node's depth is its hop
+    // count from the nearest seed
+    val visited = bfs(
+      strongTies(edges0.getOrElse(coOrderEdges(lineitem)), minWeight),
+      seedSample(lineitem).select(lit(0L).as("seed"), col("node")), rounds)
+    lineitem.select(col("l_partkey").as("node")).distinct()
+      .join(visited.select(col("node"), col("depth")), Seq("node"), "left")
       .select(coalesce(col("depth"), lit(-1L)).as("depth"))
       .groupBy(col("depth")).agg(count(lit(1)).as("n_nodes"))
       .orderBy(col("depth"))
@@ -647,37 +599,25 @@ object Graph {
     * (deterministic ~1/256 of nodes — NEVER all nodes: all-pairs
     * 2-hop is the wedge explosion [[orientedTriangles]] orients away
     * from; seeding bounds the frontier fan-out to |seeds|·deg²
-    * worst-case, and the strong-tie filter bounds deg). Two semi-join
-    * expansion rounds + one distinct — the bfs machinery without the
-    * iteration loop.
+    * worst-case, and the strong-tie filter bounds deg). The per-seed
+    * BFS of [[closenessFromSeeds]] at 2 rounds: ring 1 is depth 1, the
+    * reach is depths 1 and 2, and a seed that reaches nothing (only its
+    * depth-0 row) is absent.
     *
     * Output: (node, n_one_hop, n_two_hop_reach), ordered by node —
     * n_two_hop_reach counts BOTH rings (≤ 2 hops). */
   def twoHopReach(lineitem: DataFrame, minWeight: Long = 2L,
-                  edges0: Option[DataFrame] = None): DataFrame = {
-    val e0 = edges0.getOrElse(coOrderEdges(lineitem))
-      .filter(col("w") >= minWeight).select(col("a"), col("b"))
-    val und = e0.unionByName(
-      e0.select(col("b").as("a"), col("a").as("b")))
-    val seeds = lineitem.select(col("l_partkey").as("seed")).distinct()
-      .filter(substring(md5(col("seed").cast("string")), 1, 2) === "00")
-    val one = und.join(seeds.withColumnRenamed("seed", "a"),
-        Seq("a"), "left_semi")
-      .select(col("a").as("seed"), col("b").as("node")).distinct()
-    val two = one.withColumnRenamed("node", "a")
-      .join(und, Seq("a"))
-      .select(col("seed"), col("b").as("node"))
-    val reach = one.unionByName(two).distinct()
-      .filter(col("node") =!= col("seed"))
-    val oneCnt = one.filter(col("node") =!= col("seed"))
-      .groupBy(col("seed")).agg(count(lit(1)).as("n_one_hop"))
-    reach.groupBy(col("seed")).agg(count(lit(1)).as("n_two_hop_reach"))
-      .join(oneCnt, Seq("seed"), "left")
-      .select(col("seed").as("node"),
-        coalesce(col("n_one_hop"), lit(0L)).as("n_one_hop"),
+                  edges0: Option[DataFrame] = None): DataFrame =
+    seedBfsVisited(lineitem, 2, minWeight, edges0)
+      .filter(col("depth") > 0L)
+      .groupBy(col("seed"))
+      .agg(count(when(col("depth") === 1L, 1)).as("n_one_hop"),
+        count(lit(1)).as("n_two_hop_reach"))
+      // the md5 filter already dropped null keys; coalesce only tells
+      // the schema so (a reaching seed is an edge endpoint, non-null)
+      .select(coalesce(col("seed"), lit(0L)).as("node"), col("n_one_hop"),
         col("n_two_hop_reach"))
       .orderBy(col("node"))
-  }
 
   /** DEGREE GINI (round 14) — inequality of the co-order degree
     * distribution: the hub-concentration number that decides whether
@@ -696,10 +636,7 @@ object Graph {
     import org.apache.spark.sql.expressions.Window
     val e = edges0.getOrElse(coOrderEdges(lineitem))
       .select(col("a"), col("b"))
-    val deg = e.select(col("a").as("n"))
-      .unionByName(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("d"))
-    val g = deg.groupBy(col("d").as("v")).agg(count(lit(1)).as("cnt"))
+    val g = nodeDegrees(e).groupBy(col("deg").as("v")).agg(count(lit(1)).as("cnt"))
     val w = Window.orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, -1)
     g.withColumn("clt", coalesce(sum(col("cnt")).over(w), lit(0L)))
@@ -773,44 +710,15 @@ object Graph {
           "AS BIGINT)").as("closeness_ppm"))
       .orderBy(col("seed"))
 
-  /** The per-seed round-capped BFS both [[closenessFromSeeds]] and
-    * [[eccentricityFromSeeds]] aggregate over: (seed, node, min-depth)
-    * for every node within `rounds` hops of an md5-'00' seed on the
-    * strong-tie subgraph — one frontier-edge equi-join + one visited
-    * anti-join per round, localCheckpoint keeping the chain linear. */
+  /** The per-seed round-capped BFS the seed readouts aggregate over:
+    * (seed, node, min-depth) for every node within `rounds` hops of an
+    * md5-'00' seed on the strong-tie subgraph, each seed its own class. */
   private def seedBfsVisited(lineitem: DataFrame, rounds: Int,
                              minWeight: Long,
-                             edges0: Option[DataFrame]): DataFrame = {
-    require(rounds >= 1 && rounds <= 16, s"bad rounds=$rounds")
-    val e0 = edges0.getOrElse(coOrderEdges(lineitem))
-      .filter(col("w") >= minWeight).select(col("a"), col("b"))
-    // round 20: same §2.4/§5 restructure as [[bfsLayers]] — the
-    // strong-tie relation materializes once hash-partitioned by the
-    // per-round join key, and each round checkpoints only its new
-    // (seed, node) layer; the visited anti-join reads the lazy union
-    // of the checkpointed layers.
-    val und = e0.unionByName(
-      e0.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("a"))
-      .localCheckpoint()
-    val seeds = lineitem.select(col("l_partkey").as("node")).distinct()
-      .filter(substring(md5(col("node").cast("string")), 1, 2) === "00")
-    var visited = seeds.select(col("node").as("seed"), col("node"),
-      lit(0L).as("depth")).localCheckpoint()
-    var frontier = visited.select(col("seed"), col("node"))
-    for (d <- 1 to rounds) {
-      val next = und
-        .join(frontier.withColumnRenamed("node", "a"), Seq("a"))
-        .select(col("seed"), col("b").as("node")).distinct()
-        .join(visited.select(col("seed"), col("node")),
-          Seq("seed", "node"), "left_anti")
-        .select(col("seed"), col("node"), lit(d.toLong).as("depth"))
-        .localCheckpoint()
-      visited = visited.unionByName(next)
-      frontier = next.select(col("seed"), col("node"))
-    }
-    visited
-  }
+                             edges0: Option[DataFrame]): DataFrame =
+    bfs(strongTies(edges0.getOrElse(coOrderEdges(lineitem)), minWeight),
+      seedSample(lineitem).select(col("node").as("seed"), col("node")),
+      rounds)
 
   /** ECCENTRICITY AT HORIZON from md5 seeds (round 16) — the diameter-
     * side companion of [[closenessFromSeeds]]' centrality: per seed,
@@ -879,31 +787,18 @@ object Graph {
                 minWeight: Long = 2L,
                 edges0: Option[DataFrame] = None): DataFrame = {
     require(rounds >= 1 && rounds <= 8, s"bad rounds=$rounds")
-    val e0 = edges0.getOrElse(coOrderEdges(lineitem))
-      .filter(col("w") >= minWeight).select(col("a"), col("b"))
-    // round 20 (guide §2.4): the walk relation was already materialized
-    // once, but UNPARTITIONED — each of the `rounds` matvec joins on
-    // "a" re-exchanged it. Hash-partition it in the same build job
-    // (localCheckpoint preserves outputPartitioning) so the per-step
-    // join shuffles only the count frame.
-    val und = e0.unionByName(
-      e0.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("a"))
-      .localCheckpoint()
-    var c = und.select(col("a").as("node")).distinct()
-      .withColumn("cnt", lit(1L))
-    var score: DataFrame = null
-    for (step <- 1 to rounds) {
-      val next = und
-        .join(c.select(col("node").as("a"), col("cnt").as("pc")), Seq("a"))
-        .groupBy(col("b")).agg(sum(col("pc")).as("cnt"))
-        .select(col("b").as("node"), col("cnt")).localCheckpoint()
-      c = next
-      val contrib = next.select(col("node"),
-        (col("cnt") * (1L << (rounds - step))).as("s"))
-      score = if (score == null) contrib else score.unionByName(contrib)
+    val ties = strongTies(edges0.getOrElse(coOrderEdges(lineitem)), minWeight)
+    // walks(k − 1) = (node, w_k): one sparse matvec per step
+    val walks = supersteps(ties.select(col("src").as("node")).distinct()
+        .withColumn("cnt", lit(1L)), rounds) { c =>
+      ties.join(c.select(col("node").as("src"), col("cnt").as("pc")), Seq("src"))
+        .groupBy(col("dst")).agg(sum(col("pc")).as("cnt"))
+        .select(col("dst").as("node"), col("cnt"))
     }
-    score.groupBy(col("node"))
+    walks.zipWithIndex.map { case (w, i) =>
+        w.select(col("node"), (col("cnt") * (1L << (rounds - 1 - i))).as("s"))
+      }.reduce(_ unionByName _)
+      .groupBy(col("node"))
       .agg(sum(col("s")).as("katz_x16"))
       .orderBy(col("katz_x16").desc, col("node"))
       .limit(k)
@@ -928,19 +823,9 @@ object Graph {
     val e = edges0.getOrElse(scope.track(coOrderEdges(lineitem)))
       .select(col("a"), col("b"))
     val tri = tri0.getOrElse(orientedTriangles(e))
-    val deg = e.select(col("a").as("n")).unionByName(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    val donations = tri.select(explode(array(
-        struct(least(col("x"), col("y")).as("a"),
-          greatest(col("x"), col("y")).as("b"), col("z").as("cnb")),
-        struct(least(col("x"), col("z")).as("a"),
-          greatest(col("x"), col("z")).as("b"), col("y").as("cnb")),
-        struct(least(col("y"), col("z")).as("a"),
-          greatest(col("y"), col("z")).as("b"), col("x").as("cnb"))))
-        .as("d"))
-      .select(col("d.a").as("a"), col("d.b").as("b"), col("d.cnb").as("cnb"))
-    donations
-      .join(broadcast(deg.select(col("n").as("cnb"), col("deg"))), Seq("cnb"))
+    val deg = nodeDegrees(e)
+    donations(tri)
+      .join(broadcast(deg.select(col("node").as("cnb"), col("deg"))), Seq("cnb"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("cn"),
         sum(expr("1000000 div deg")).as("ra_score_ppm"))
@@ -967,10 +852,7 @@ object Graph {
     val e = edges0.getOrElse(coOrderEdges(lineitem))
       .select(col("a"), col("b"))
     val tri = tri0.getOrElse(orientedTriangles(e))
-    val degAgg = e.select(col("a").as("n"))
-      .unionByName(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-      .agg(count(lit(1)).as("n_nodes"),
+    val degAgg = nodeDegrees(e).agg(count(lit(1)).as("n_nodes"),
         coalesce(sum(expr("(deg * (deg - 1L)) div 2")), lit(0L))
           .as("n_wedges"))
     val ne = e.agg(count(lit(1)).as("n_edges"))
@@ -982,9 +864,23 @@ object Graph {
           "AS BIGINT)").as("transitivity_ppm"))
   }
 
+  /** Common-neighbor donations of an [[orientedTriangles]] relation:
+    * each triangle (x, y, z) donates z to edge (x, y), y to (x, z) and
+    * x to (y, z), endpoints normalized a < b (part keys, not the degree
+    * order). Output: (a, b, cnb). */
+  private def donations(tri: DataFrame): DataFrame =
+    tri.select(explode(array(
+        struct(least(col("x"), col("y")).as("a"),
+          greatest(col("x"), col("y")).as("b"), col("z").as("cnb")),
+        struct(least(col("x"), col("z")).as("a"),
+          greatest(col("x"), col("z")).as("b"), col("y").as("cnb")),
+        struct(least(col("y"), col("z")).as("a"),
+          greatest(col("y"), col("z")).as("b"), col("x").as("cnb"))))
+        .as("d"))
+      .select(col("d.a").as("a"), col("d.b").as("b"), col("d.cnb").as("cnb"))
+
   private[graft] def degreeOriented(e: DataFrame): DataFrame = {
-    val deg = e.select(col("a").as("n")).unionByName(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
+    val deg = nodeDegrees(e)
     val aFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
     // the degree frame is node-bounded (dimension-sized next to the
@@ -992,8 +888,8 @@ object Graph {
     // map-side joins, not two shuffles of the full edge list; at a
     // scale where nodes outgrow broadcast, drop the hint and the same
     // plan degrades gracefully to shuffle joins
-    e.join(broadcast(deg.select(col("n").as("a"), col("deg").as("da"))), Seq("a"))
-      .join(broadcast(deg.select(col("n").as("b"), col("deg").as("db"))), Seq("b"))
+    e.join(broadcast(deg.select(col("node").as("a"), col("deg").as("da"))), Seq("a"))
+      .join(broadcast(deg.select(col("node").as("b"), col("deg").as("db"))), Seq("b"))
       .select(
         when(aFirst, col("a")).otherwise(col("b")).as("u"),
         when(aFirst, col("b")).otherwise(col("a")).as("v"),
@@ -1060,22 +956,9 @@ object Graph {
     val e = edges0.getOrElse(scope.track(coOrderEdges(lineitem)))
       .select(col("a"), col("b"))
     val tri = tri0.getOrElse(orientedTriangles(e))
-    val deg = e.select(col("a").as("n")).unionByName(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    // each triangle (x, y, z) donates: z to edge (x,y), y to (x,z), x
-    // to (y,z) — endpoints normalized a < b (part keys, not the
-    // degree order)
-    val donations = tri.select(explode(array(
-        struct(least(col("x"), col("y")).as("a"),
-          greatest(col("x"), col("y")).as("b"), col("z").as("cnb")),
-        struct(least(col("x"), col("z")).as("a"),
-          greatest(col("x"), col("z")).as("b"), col("y").as("cnb")),
-        struct(least(col("y"), col("z")).as("a"),
-          greatest(col("y"), col("z")).as("b"), col("x").as("cnb"))))
-        .as("d"))
-      .select(col("d.a").as("a"), col("d.b").as("b"), col("d.cnb").as("cnb"))
-    donations
-      .join(broadcast(deg.select(col("n").as("cnb"), col("deg"))), Seq("cnb"))
+    val deg = nodeDegrees(e)
+    donations(tri)
+      .join(broadcast(deg.select(col("node").as("cnb"), col("deg"))), Seq("cnb"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("cn"),
         sum(expr("1000000 div CAST(length(bin(deg)) AS BIGINT)"))
@@ -1100,8 +983,7 @@ object Graph {
   def richClub(lineitem: DataFrame,
                edges0: Option[DataFrame] = None): DataFrame = {
     val e = edges0.getOrElse(coOrderEdges(lineitem)).select(col("a"), col("b"))
-    val deg = e.select(col("a").as("n")).unionByName(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
+    val deg = nodeDegrees(e)
     val degB = deg.withColumn("t", expr("CAST(length(bin(deg)) AS BIGINT)"))
     // node survives threshold t iff deg > 2^t - 1 iff bitlen(deg) > t:
     // nodes per octave threshold (bounded explode over t = 1..bitlen-1)
@@ -1112,9 +994,9 @@ object Graph {
       .select(explode(sequence(lit(1L), col("t") - 1)).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("n_nodes"))
     val edgesAt = e
-      .join(broadcast(deg.select(col("n").as("a"), col("deg").as("da"))),
+      .join(broadcast(deg.select(col("node").as("a"), col("deg").as("da"))),
         Seq("a"))
-      .join(broadcast(deg.select(col("n").as("b"), col("deg").as("db"))),
+      .join(broadcast(deg.select(col("node").as("b"), col("deg").as("db"))),
         Seq("b"))
       .select(least(expr("CAST(length(bin(da)) AS BIGINT)"),
         expr("CAST(length(bin(db)) AS BIGINT)")).as("tmin"))

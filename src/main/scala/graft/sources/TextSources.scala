@@ -502,9 +502,13 @@ object TextSources {
             org.apache.spark.sql.types.IntegerType),
           org.apache.spark.sql.types.StructField("h",
             org.apache.spark.sql.types.StringType))))
+    // load the staged directory itself, not a `doc_id=*` glob: Spark
+    // probes a glob path for a streaming `_spark_metadata` dir and logs
+    // a FileNotFoundException stack trace per read. doc_id comes from
+    // the path below, so the discovered partition column goes unread.
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.txt")
-      .load(s"$out/doc_id=*")
+      .load(out)
       .select(
         regexp_extract(col("path"), "doc_id=(\\d+)", 1).cast("long")
           .as("doc_id"),

@@ -110,16 +110,10 @@ class DedupSimilaritySpec extends SparkSpec {
         assert(stressedLabels(n + o) == l + o, s"copy ${n + o} mislabeled")
       }
     }
-    // parallelism: an explicit labelPartitions forces the label-frame
-    // width (the default lets AQE size it — either way, no fixed
-    // coalesce(8) ceiling remains). smallGraphEdgeCap=0 forces the
-    // distributed propagation (the probe would otherwise take the
-    // union-find fast path on a graph this small)
-    val wide = Dedup.connectedComponents(base.repartition(16),
-      labelPartitions = Some(16), smallGraphEdgeCap = 0L)
-    assert(wide.rdd.getNumPartitions == 16)
     // the driver union-find fast path and the distributed propagation
-    // must agree bit-for-bit on the same graph
+    // must agree bit-for-bit on the same graph (smallGraphEdgeCap=0
+    // forces the distributed propagation; the probe would otherwise take
+    // the union-find fast path on a graph this small)
     val dist = Dedup.connectedComponents(stressed, smallGraphEdgeCap = 0L)
       .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("lbl")).toMap
     assert(dist == stressedLabels)

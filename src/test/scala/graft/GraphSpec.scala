@@ -452,12 +452,15 @@ class GraphSpec extends SparkSpec {
     "is invisible, non-seed nodes absent") {
     // 168 is an md5-'00' seed (the bfs sample rule); chain
     // 168—1—2—3 with strong ties (w≥2 = two shared orders) plus a
-    // WEAK 168—9 tie (one order) that must not count
+    // WEAK 168—9 tie (one order) that must not count. 363 is a second
+    // md5-'00' seed whose ties are all weak: it reaches nothing, so it
+    // is absent (its depth-0 BFS row must not surface as a reach row)
     val fx = li(
       1L -> Seq(168L, 1L), 2L -> Seq(168L, 1L),   // 168-1 strong
       3L -> Seq(1L, 2L), 4L -> Seq(1L, 2L),       // 1-2 strong
       5L -> Seq(2L, 3L), 6L -> Seq(2L, 3L),       // 2-3 strong (3 hops out)
-      7L -> Seq(168L, 9L))                        // weak tie
+      7L -> Seq(168L, 9L),                        // weak tie
+      8L -> Seq(363L, 2L), 9L -> Seq(363L, 9L))   // weak-only seed
     val out = Graph.twoHopReach(fx).collect()
     assert(out.length == 1, out.mkString(";"))
     val r = out.head
