@@ -625,31 +625,18 @@ object Graph {
     * uniform, any partitioning works) or hub-dominated (Gini → 1: a
     * few super-connectors own most edges — exactly when the wedge
     * join needs its degree orientation and the shuffle needs skew
-    * handling). The `order_gini` machinery applied to degrees:
-    * value-grouped exact ranking (one ordered window over the BOUNDED
-    * degree grid), the doubled-rank weighted sum in integers, one
-    * IEEE division at the end.
+    * handling). The `order_gini` readout ([[RankGrid.gini]]) applied
+    * to degrees: the value-grouped degree grid through the rank
+    * kernel, the rank-weighted sum in integers, one IEEE division at
+    * the end.
     *
     * Output (one row): n_nodes, sum_degree, gini_num, gini. */
   def degreeGini(lineitem: DataFrame,
                  edges0: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = edges0.getOrElse(coOrderEdges(lineitem))
       .select(col("a"), col("b"))
-    val g = nodeDegrees(e).groupBy(col("deg").as("v")).agg(count(lit(1)).as("cnt"))
-    val w = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    g.withColumn("clt", coalesce(sum(col("cnt")).over(w), lit(0L)))
-      .agg(coalesce(sum(col("cnt")), lit(0L)).as("n_nodes"),
-        coalesce(sum(col("v") * col("cnt")), lit(0L)).as("sum_degree"),
-        coalesce(sum(col("v") * (col("cnt") * col("clt") +
-          expr("(cnt * (cnt + 1)) div 2"))), lit(0L)).as("rw"))
-      .select(col("n_nodes"), col("sum_degree"),
-        (lit(2L) * col("rw") - (col("n_nodes") + 1L) * col("sum_degree"))
-          .as("gini_num"))
-      .select(col("n_nodes"), col("sum_degree"), col("gini_num"),
-        (col("gini_num").cast("double") /
-          expr("nullif(n_nodes * sum_degree, 0)")).as("gini"))
+    RankGrid.gini(nodeDegrees(e).groupBy(col("deg").as("v"))
+      .agg(count(lit(1)).as("cnt")), "n_nodes", "sum_degree")
   }
 
   /** EDGE-WEIGHT HISTOGRAM (round 14) — the distribution that SIZES

@@ -417,131 +417,53 @@ object Relational {
     * computed from ORDER STATISTICS with exact rational interpolation —
     * not the builtin `percentile`, whose double interpolation
     * (lo + (hi-lo)·frac, frac from a 0.9·(n-1) product) can differ from
-    * another engine's formulation in the last ulp. Here the type-7
-    * position (n-1)·num/den is exact integer arithmetic (idx, rem), the
-    * two bracketing order statistics come off a distinct-value rank
-    * frame, and the interpolated value is ONE IEEE division of an exact
-    * integer numerator: (v_lo·(den-rem) + v_hi·rem)/den — bit-identical
-    * in any engine that replays the same formula.
+    * another engine's formulation in the last ulp. The value-grouped
+    * length grid goes through [[RankGrid.quartiles]]: exact integer
+    * positions, the bracketing order statistics by rank-bracket
+    * selection, ONE IEEE division per quartile.
     *
-    * Memory is O(distinct lengths) like the builtin (the rank frame is
-    * a groupBy on the value; its running-sum window runs unpartitioned
-    * over the DISTINCT values only — bounded domain, so a single
-    * partition holds it at any corpus size). The boundedness is
+    * Memory is O(distinct lengths) like the builtin. The boundedness is
     * ENFORCED in-plan, not assumed: an over-`maxDistinct` domain aborts
     * with the alternative named (the connPoolState assert_true
-    * discipline) before the one-task window consumes it. For
+    * discipline) before the rank kernel consumes it. For
     * unbounded-domain columns use [[lengthQuantilesApprox]] (GK
     * sketch) instead. */
   def lengthQuantiles(docs: DataFrame, maxDistinct: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val quartiles = Seq(("p25", 1L, 4L), ("p50", 1L, 2L),
-      ("p75", 3L, 4L), ("p90", 9L, 10L)).toDF("qname", "num", "den")
     val counts0 = docs.groupBy(col("n_chars").as("v"))
       .agg(count(lit(1)).as("cnt"))
     // IN-PLAN domain gate (1-row count branch off the groupBy's own
-    // exchange — no second pass over the corpus): the unpartitioned
-    // running-sum window below sorts every DISTINCT value in ONE task,
-    // which is only sane on a bounded domain. If the domain surprises,
-    // fail loudly with the fix named instead of silently spilling a
-    // single executor.
+    // exchange — no second pass over the corpus): the exact rank frame
+    // holds every DISTINCT value, which is only sane on a bounded
+    // domain. If the domain surprises, fail loudly with the fix named
+    // instead of silently spilling.
     val nDistinct = counts0.agg(count(lit(1)).as("n_vals"))
     val counts = counts0.crossJoin(broadcast(nDistinct))
       .filter(assert_true(col("n_vals") <= maxDistinct,
         lit(s"lengthQuantiles: more than $maxDistinct distinct values — " +
-          "the exact rank frame would sort them in ONE task. Use " +
+          "the exact rank frame would hold every one of them. Use " +
           "lengthQuantilesApprox (GK sketch) for unbounded domains, or " +
           "raise maxDistinct if the domain really is bounded.")).isNull)
       .drop("n_vals")
-    val cum = counts
-      .withColumn("hi_rank", sum(col("cnt")).over(Window.orderBy(col("v"))))
-      .withColumn("lo_rank", col("hi_rank") - col("cnt") + lit(1))
     val nrow = docs.agg(count(lit(1)).as("n"),
       min(col("n_chars")).as("lo"), max(col("n_chars")).as("hi"))
-    // 1-based ranks of the two bracketing order statistics per quartile:
-    // klo = floor((n-1)·num/den)+1, khi = klo+1 (only needed when rem>0)
-    val ranks = nrow.select(col("n")).crossJoin(quartiles)
-      .withColumn("pos_num", (col("n") - 1) * col("num"))
-      .withColumn("rem", pmod(col("pos_num"), col("den")))
-      .withColumn("klo", expr("pos_num DIV den") + 1)
-      .select(col("qname"), col("den"), col("rem"),
-        explode(array(
-          struct(col("klo").as("k"), lit(0).as("which")),
-          struct((col("klo") + 1).as("k"), lit(1).as("which")))).as("kk"))
-      .select(col("qname"), col("den"), col("rem"),
-        col("kk.k").as("k"), col("kk.which").as("which"))
-      .filter(col("which") === 0 || col("rem") > 0)
-    val vals = cum.join(broadcast(ranks),
-        col("k") >= col("lo_rank") && col("k") <= col("hi_rank"))
-      .groupBy(col("qname"), col("den"), col("rem"))
-      .agg(max(when(col("which") === 0, col("v"))).as("vlo"),
-        max(when(col("which") === 1, col("v"))).as("vhi"))
-      .withColumn("qval",
-        (col("vlo").cast("long") * (col("den") - col("rem")) +
-          coalesce(col("vhi"), col("vlo")).cast("long") * col("rem"))
-          .cast("double") / col("den").cast("double"))
-    vals.agg(
-        max(when(col("qname") === "p25", col("qval"))).as("p25"),
-        max(when(col("qname") === "p50", col("qval"))).as("p50"),
-        max(when(col("qname") === "p75", col("qval"))).as("p75"),
-        max(when(col("qname") === "p90", col("qval"))).as("p90"))
+    RankGrid.quartiles(counts, Nil, nrow.select(col("n")))
       .crossJoin(nrow.select(col("lo"), col("hi")))
   }
 
   /** Per-GROUP exact type-7 quantiles — [[lengthQuantiles]] generalized
     * from one global distribution to one per `o_orderpriority`, over
     * order totals in EXACT integer cents (the [[priceHistogram]]
-    * domain). Same exact-rational machinery, group-partitioned: the
-    * rank frame's running sum windows PER GROUP over distinct values
-    * (bounded domain per group), bracketing order statistics join
-    * through a broadcast ranks frame, and the single double division
-    * per quantile happens after exact integer interpolation — so the
-    * per-group quartiles hash-match the oracle even on fractional
+    * domain). Same [[RankGrid.quartiles]] readout, keyed by group, so
+    * the per-group quartiles hash-match the oracle even on fractional
     * positions. Output: (grp, n, p25, p50, p75, p90, lo, hi) ordered. */
   def groupQuantiles(orders: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = orders.sparkSession
-    import spark.implicits._
-    val quartiles = Seq(("p25", 1L, 4L), ("p50", 1L, 2L),
-      ("p75", 3L, 4L), ("p90", 9L, 10L)).toDF("qname", "num", "den")
     val base = orders.select(col("o_orderpriority").as("grp"),
       (dec2(col("o_totalprice")) * 100).cast("long").as("v"))
     val counts = base.groupBy(col("grp"), col("v"))
       .agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy(col("grp")).orderBy(col("v"))
-    val cum = counts
-      .withColumn("hi_rank", sum(col("cnt")).over(w))
-      .withColumn("lo_rank", col("hi_rank") - col("cnt") + lit(1))
     val nrow = base.groupBy(col("grp")).agg(count(lit(1)).as("n"),
       min(col("v")).as("lo"), max(col("v")).as("hi"))
-    val ranks = nrow.select(col("grp"), col("n")).crossJoin(quartiles)
-      .withColumn("pos_num", (col("n") - 1) * col("num"))
-      .withColumn("rem", pmod(col("pos_num"), col("den")))
-      .withColumn("klo", expr("pos_num DIV den") + 1)
-      .select(col("grp").as("rgrp"), col("qname"), col("den"), col("rem"),
-        explode(array(
-          struct(col("klo").as("k"), lit(0).as("which")),
-          struct((col("klo") + 1).as("k"), lit(1).as("which")))).as("kk"))
-      .select(col("rgrp"), col("qname"), col("den"), col("rem"),
-        col("kk.k").as("k"), col("kk.which").as("which"))
-      .filter(col("which") === 0 || col("rem") > 0)
-    val vals = cum.join(broadcast(ranks),
-        col("grp") === col("rgrp") &&
-          col("k") >= col("lo_rank") && col("k") <= col("hi_rank"))
-      .groupBy(col("grp"), col("qname"), col("den"), col("rem"))
-      .agg(max(when(col("which") === 0, col("v"))).as("vlo"),
-        max(when(col("which") === 1, col("v"))).as("vhi"))
-      .withColumn("qval",
-        (col("vlo") * (col("den") - col("rem")) +
-          coalesce(col("vhi"), col("vlo")) * col("rem"))
-          .cast("double") / col("den").cast("double"))
-    vals.groupBy(col("grp"))
-      .agg(max(when(col("qname") === "p25", col("qval"))).as("p25"),
-        max(when(col("qname") === "p50", col("qval"))).as("p50"),
-        max(when(col("qname") === "p75", col("qval"))).as("p75"),
-        max(when(col("qname") === "p90", col("qval"))).as("p90"))
+    RankGrid.quartiles(counts, Seq("grp"), nrow.select(col("grp"), col("n")))
       .join(nrow, "grp")
       .select(col("grp"), col("n"), col("p25"), col("p50"), col("p75"),
         col("p90"), col("lo"), col("hi"))
@@ -2438,14 +2360,8 @@ object Relational {
     * + a calendar-bounded lag — nothing row-scale after the scan.
     *
     * Output: one row (n_pairs, n_nonzero, n_pos, n_neg, z2_milli). */
-  def signTest(orders: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wd = Window.orderBy(col("day"))
-    val diffs = dailyRevenueSeries(orders)
-      .withColumn("prev", lag(col("x"), 7).over(wd))
-      .filter(col("prev").isNotNull)
-      .select((col("x") - col("prev")).as("d"))
-    diffs.agg(count(lit(1)).as("n_pairs"),
+  def signTest(orders: DataFrame): DataFrame =
+    weekOverWeek(dailyRevenueSeries(orders)).agg(count(lit(1)).as("n_pairs"),
         coalesce(sum(when(col("d") > 0L, 1L).otherwise(0L)), lit(0L))
           .as("n_pos"),
         coalesce(sum(when(col("d") < 0L, 1L).otherwise(0L)), lit(0L))
@@ -2454,7 +2370,6 @@ object Relational {
         col("n_pos"), col("n_neg"),
         expr("((n_pos - n_neg) * (n_pos - n_neg) * 1000) div " +
           "nullif(n_pos + n_neg, 0L)").as("z2_milli"))
-  }
 
   /** WILCOXON SIGNED-RANK (round 15) — the PAIRED nonparametric test
     * the unpaired [[mannWhitney]] cannot run: is this week's daily
@@ -2464,46 +2379,26 @@ object Relational {
     * drop (the standard convention); |d| ranks with ties at their
     * AVERAGE rank via the DOUBLED-rank trick (2·c_lt + m + 1 per value
     * group — stays BIGINT, no halving division, the mannwhitney
-    * doctrine), computed on the value-grouped |d| grid, never a
-    * row-level sort. W⁺ + W⁻ = n(n+1) doubled — the identity the spec
-    * pins.
+    * doctrine), computed on the value-grouped |d| grid through
+    * [[RankGrid.below]], never a row-level sort. W⁺ + W⁻ = n(n+1)
+    * doubled — the identity the spec pins.
     *
     * Output: one row (n_days, n_pairs, n_nonzero, w_plus_doubled,
     * w_minus_doubled). */
   def wilcoxonSignedRank(orders: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cents = (col("o_totalprice").cast(DecimalType(12, 2)) * 100)
-      .cast("long")
-    val daily = orders
-      .select(date_trunc("day", col("o_orderdate")).as("day"),
-        cents.as("c"))
-      .groupBy(col("day")).agg(sum(col("c")).as("rev"))
-    val grid = daily
-      .agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"),
-        expr("interval 1 day"))).as("day"))
-    val series = grid.join(broadcast(daily), Seq("day"), "left")
-      .select(col("day"), coalesce(col("rev"), lit(0L)).as("x"))
-    val wd = Window.orderBy(col("day"))
-    val diffs = series
-      .withColumn("prev", lag(col("x"), 7).over(wd))
-      .filter(col("prev").isNotNull)
-      .select((col("x") - col("prev")).as("d"))
-    val nonzero = diffs.filter(col("d") =!= 0L)
-      .select(abs(col("d")).as("ad"), (col("d") > 0L).as("pos"))
-    val groups = nonzero.groupBy(col("ad"))
+    val series = dailyRevenueSeries(orders)
+    val diffs = weekOverWeek(series)
+    val groups = diffs.filter(col("d") =!= 0L)
+      .groupBy(abs(col("d")).as("ad"))
       .agg(count(lit(1)).as("m"),
-        sum(when(col("pos"), 1L).otherwise(0L)).as("mpos"))
-    val wv = Window.orderBy(col("ad"))
-    val ranked = groups
-      .withColumn("cum", sum(col("m")).over(wv))
-      .withColumn("clt", col("cum") - col("m"))
-      // average rank of the tie group, doubled: 2·c_lt + m + 1
-      .withColumn("dr", col("clt") * 2 + col("m") + 1L)
-    val stats = ranked.agg(
+        sum(when(col("d") > 0L, 1L).otherwise(0L)).as("mpos"))
+    // average rank of the tie group, doubled: 2·c_lt + m + 1
+    val dr = col("m_lt") * 2 + col("m") + 1L
+    // mpos rides through the kernel as a second count column
+    val stats = RankGrid.below(groups, Nil, "ad", Seq("m", "mpos")).agg(
       coalesce(sum(col("m")), lit(0L)).as("n_nonzero"),
-      coalesce(sum(col("mpos") * col("dr")), lit(0L)).as("w_plus_doubled"),
-      coalesce(sum((col("m") - col("mpos")) * col("dr")), lit(0L))
+      coalesce(sum(col("mpos") * dr), lit(0L)).as("w_plus_doubled"),
+      coalesce(sum((col("m") - col("mpos")) * dr), lit(0L))
         .as("w_minus_doubled"))
     val counts = series.agg(count(lit(1)).as("n_days"))
       .crossJoin(diffs.agg(count(lit(1)).as("n_pairs")))
@@ -2524,8 +2419,8 @@ object Relational {
     * doubled, and the χ²_F statistic lands as one deterministic
     * integer division: with ΣR²_true = ΣR²_doubled/4,
     * χ²_F·1000 = (3000·ΣR²_d) div (n·k·(k+1)) − 3000·n·(k+1).
-    * Blocks are calendar-bounded; every window runs per-week over ≤ 7
-    * value groups.
+    * Blocks are calendar-bounded; the ranks come from
+    * [[RankGrid.below]] keyed by week, over ≤ 7 value groups each.
     *
     * Output: (dow, n_blocks, r_sum_doubled, chi2f_milli), 7 rows,
     * ordered by dow (Spark dayofweek, 1 = Sunday). */
@@ -2552,32 +2447,18 @@ object Relational {
     * value-grouped average ranks doubled so ties stay BIGINT.
     * Returns (week, dow, dr). */
   private def friedmanRanks(orders: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cents = (col("o_totalprice").cast(DecimalType(12, 2)) * 100)
-      .cast("long")
-    val daily = orders
-      .select(date_trunc("day", col("o_orderdate")).as("day"),
-        cents.as("c"))
-      .groupBy(col("day")).agg(sum(col("c")).as("rev"))
-    val grid = daily
-      .agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"),
-        expr("interval 1 day"))).as("day"))
-    val series = grid.join(broadcast(daily), Seq("day"), "left")
+    val series = dailyRevenueSeries(orders)
       .select(date_trunc("week", col("day")).as("week"),
-        dayofweek(col("day")).cast("long").as("dow"),
-        coalesce(col("rev"), lit(0L)).as("x"))
+        dayofweek(col("day")).cast("long").as("dow"), col("x"))
     val complete = series.groupBy(col("week"))
       .agg(count(lit(1)).as("nd")).filter(col("nd") === 7L)
       .select(col("week"))
     val blocks = series.join(broadcast(complete), Seq("week"), "left_semi")
     val groups = blocks.groupBy(col("week"), col("x"))
       .agg(count(lit(1)).as("m"))
-    val wv = Window.partitionBy(col("week")).orderBy(col("x"))
-    val dr = groups
-      .withColumn("cum", sum(col("m")).over(wv))
+    val dr = RankGrid.below(groups, Seq("week"), "x", Seq("m"))
       .select(col("week"), col("x"),
-        ((col("cum") - col("m")) * 2 + col("m") + 1L).as("dr"))
+        (col("m_lt") * 2 + col("m") + 1L).as("dr"))
     blocks.join(dr, Seq("week", "x"))
       .select(col("week"), col("dow"), col("dr"))
   }
@@ -2872,7 +2753,7 @@ object Relational {
     * relation (price vs quantity under tiered pricing) still scores,
     * and outliers stop dominating. Exactness composition of two
     * proven doctrines: ranks are the DOUBLED tied average ranks from
-    * the bounded value-grid prefix fold ([[mannWhitneyU]] — rho is
+    * value-grouped grid through [[RankGrid.below]] (rho is
     * invariant to the ×2), rank moments accumulate in DECIMAL(38,0)
     * (rank sums overflow int64 at warehouse scale), and the final
     * Pearson-on-ranks expression goes through the decimal→STRING→
@@ -2882,35 +2763,14 @@ object Relational {
     *
     * Output (one row): n, spearman_rho. */
   def spearmanCorr(lineitem: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val rows = lineitem.select(
       col("l_quantity").cast("long").as("x"),
       (col("l_extendedprice").cast(DecimalType(12, 2)) * 100).cast("long")
         .as("y"))
-    def rankTable(c: String) = {
-      // round 19, two-level bucketed cumulative (the hodgesLehmann
-      // selection doctrine): the price grid has ~|rows| distinct cents
-      // values, and the old global ORDER BY window computed the
-      // strictly-less count in ONE task over the whole grid (guide
-      // §2.5 straggler). Values bucket by the monotone arithmetic
-      // shift (floor division by 2^16), the cumulative window runs
-      // over the bucket rollup, and the per-value windows partition BY
-      // BUCKET — parallel, each task grid/|buckets| rows. clt (and so
-      // the doubled tied rank) is bit-identical.
-      val grid = rows.groupBy(col(c)).agg(count(lit(1)).as("cnt"))
-      val byB = grid.withColumn("bkt", shiftright(col(c), 16))
-      val perB = byB.groupBy(col("bkt")).agg(sum(col("cnt")).as("bc"))
-      val cumB = perB
-        .withColumn("cum_hi", sum(col("bc")).over(Window.orderBy(col("bkt"))))
-        .select(col("bkt"), (col("cum_hi") - col("bc")).as("cum_lo"))
-      val win = Window.partitionBy(col("bkt")).orderBy(col(c))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      byB.join(broadcast(cumB), "bkt")
-        .withColumn("clt",
-          col("cum_lo") + coalesce(sum(col("cnt")).over(win), lit(0L)))
-        .select(col(c),
-          (col("clt") * 2L + col("cnt") + 1L).as(s"r_$c"))
-    }
+    def rankTable(c: String) =
+      RankGrid.below(rows.groupBy(col(c)).agg(count(lit(1)).as("cnt")),
+          Nil, c, Seq("cnt"))
+        .select(col(c), (col("cnt_lt") * 2L + col("cnt") + 1L).as(s"r_$c"))
     val dec = DecimalType(38, 0)
     def d(c: Column) = c.cast("string").cast("double")
     rows
@@ -2929,6 +2789,34 @@ object Relational {
           .as("spearman_rho"))
   }
 
+  /** The GAP-FILLED daily revenue series (exact cents over the
+    * calendar-bounded day grid), (day, x) — shared by every daily
+    * time-series readout so no two can disagree on what the series
+    * is. */
+  private def dailyRevenueSeries(orders: DataFrame): DataFrame = {
+    val cents = (col("o_totalprice").cast(DecimalType(12, 2)) * 100)
+      .cast("long")
+    val daily = orders
+      .select(date_trunc("DAY", col("o_orderdate")).as("day"), cents.as("c"))
+      .groupBy(col("day")).agg(sum(col("c")).as("rev"))
+    val grid = daily.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
+      .select(explode(sequence(col("lo"), col("hi"),
+        expr("interval 1 day"))).as("day"))
+    grid.join(broadcast(daily), Seq("day"), "left")
+      .select(col("day"), coalesce(col("rev"), lit(0L)).as("x"))
+  }
+
+  /** The lag-7 differences of a daily `series` (day, x): (day, d) for
+    * every grid day with a same-weekday predecessor — the pairs of
+    * [[signTest]], [[wilcoxonSignedRank]] and [[hodgesLehmann]]. */
+  private def weekOverWeek(series: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    series
+      .withColumn("prev", lag(col("x"), 7).over(Window.orderBy(col("day"))))
+      .filter(col("prev").isNotNull)
+      .select(col("day"), (col("x") - col("prev")).as("d"))
+  }
+
   /** REVENUE AUTOCORRELATION (round 13) — the ACF at lags 1..maxLag
     * over the DAILY revenue series, the weekly-cycle detector that
     * decides whether [[orderMonthlyGrowth]]'s trend needs seasonal
@@ -2945,23 +2833,6 @@ object Relational {
     * window pass + posexplode — one aggregation, not maxLag scans.
     *
     * Output: (acf_lag, n, acf), ordered by lag. */
-  /** The GAP-FILLED daily revenue series (exact cents over the
-    * calendar-bounded day grid) — shared by [[revenueAutocorr]] and
-    * [[rollingMedian]] so the two time-series readouts can never
-    * disagree on what the series is. */
-  private def dailyRevenueSeries(orders: DataFrame): DataFrame = {
-    val cents = (col("o_totalprice").cast(DecimalType(12, 2)) * 100)
-      .cast("long")
-    val daily = orders
-      .select(date_trunc("DAY", col("o_orderdate")).as("day"), cents.as("c"))
-      .groupBy(col("day")).agg(sum(col("c")).as("rev"))
-    val grid = daily.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"),
-        expr("interval 1 day"))).as("day"))
-    grid.join(broadcast(daily), Seq("day"), "left")
-      .select(col("day"), coalesce(col("rev"), lit(0L)).as("x"))
-  }
-
   def revenueAutocorr(orders: DataFrame, maxLag: Int = 7): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val series = dailyRevenueSeries(orders)
@@ -3069,19 +2940,8 @@ object Relational {
     *
     * Output: (day, rev_cents, forecast_cents, err_cents), ordered. */
   def holtWintersForecast(orders: DataFrame): DataFrame = {
-    val cents = (col("o_totalprice").cast(DecimalType(12, 2)) * 100)
-      .cast("long")
-    val daily = orders
-      .select(date_trunc("day", col("o_orderdate")).as("day"),
-        cents.as("c"))
-      .groupBy(col("day")).agg(sum(col("c")).as("rev"))
-    val grid = daily
-      .agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"),
-        expr("interval 1 day"))).as("day"))
-    val series = grid.join(broadcast(daily), Seq("day"), "left")
-      .select(col("day"), coalesce(col("rev"), lit(0L)).as("x"),
-        dayofweek(col("day")).cast("int").as("dw"))
+    val series = dailyRevenueSeries(orders)
+      .withColumn("dw", dayofweek(col("day")).cast("int"))
     val sd = "element_at(acc.s, e.dw)"
     val lNew = halveSql(s"e.x - $sd + acc.l + acc.t")
     val sNew = halveSql(s"e.x - ($lNew) + $sd")
@@ -3164,15 +3024,14 @@ object Relational {
     * for deciles 1..9, each arm's exact nearest-rank-low order
     * statistic (rank ((n−1)·i) div 10 + 1 — the engine-portable
     * integer convention, no interpolation) over the value-grouped
-    * cent grid, selected by a broadcast rank-bracket join against the
-    * per-arm cumulative counts — never a row-level sort. The paired
+    * cent grid, selected per arm by [[RankGrid.orderStats]] — never a
+    * row-level sort. The paired
     * columns and their gap land in one 9-row relation.
     *
     * Output: (decile, n_a, n_b, qa_cents, qb_cents, diff_cents),
     * ordered. */
   def qqDeciles(events: DataFrame, typeA: String = "click",
                 typeB: String = "purchase"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = events.sparkSession
     import spark.implicits._
     val c = (dec2(col("value")) * 100).cast("long")
@@ -3182,18 +3041,12 @@ object Relational {
         .as("arm"), c.as("v"))
     val counts = base.groupBy(col("arm"), col("v"))
       .agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy(col("arm")).orderBy(col("v"))
-    val cum = counts
-      .withColumn("hi_rank", sum(col("cnt")).over(w))
-      .withColumn("lo_rank", col("hi_rank") - col("cnt") + lit(1))
     val deciles = (1 to 9).toDF("decile")
     val ranks = base.groupBy(col("arm")).agg(count(lit(1)).as("n"))
       .crossJoin(deciles)
-      .select(col("arm").as("rarm"), col("decile"), col("n"),
+      .select(col("arm"), col("decile"), col("n"),
         (expr("((n - 1) * decile) div 10") + 1L).as("k"))
-    val qs = cum.join(broadcast(ranks),
-        col("arm") === col("rarm") &&
-          col("k") >= col("lo_rank") && col("k") <= col("hi_rank"))
+    val qs = RankGrid.orderStats(counts, Seq("arm"), "v", "cnt", ranks)
       .groupBy(col("decile"))
       .agg(max(when(col("arm") === "a", col("n"))).as("n_a"),
         max(when(col("arm") === "b", col("n"))).as("n_b"),
@@ -3324,15 +3177,15 @@ object Relational {
     * twin of the two-sample [[ksTest]]: is order volume uniform
     * across the 7 weekdays? The ECDF supremum runs entirely in the
     * integer domain over the DENSE 1..7 grid (a dow with zero orders
-    * still advances the null CDF): D·7n = max |7·cum(d) − n·d|, one
-    * division into the double D at the end. The weekday grid is the
+    * still advances the null CDF): D·7n = max |7·cum(d) − n·d|, with
+    * cum from [[RankGrid.below]], one division into the double D at the
+    * end. The weekday grid is the
     * natural uniformity null for operational load (staffing, batch
     * windows); month-length artifacts make day-of-month a dishonest
     * null.
     *
     * Output: one row (n_orders, d_scaled, d). */
   def ksUniformDow(orders: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cnt = orders
       .select(dayofweek(col("o_orderdate")).cast("long").as("dw"))
       .groupBy(col("dw")).agg(count(lit(1)).as("c"))
@@ -3341,8 +3194,8 @@ object Relational {
       .join(broadcast(cnt), Seq("dw"), "left")
       .select(col("dw"), coalesce(col("c"), lit(0L)).as("c"))
     val n = dense.agg(coalesce(sum(col("c")), lit(0L)).as("n_orders"))
-    val w = Window.orderBy(col("dw"))
-    dense.withColumn("cum", sum(col("c")).over(w))
+    RankGrid.below(dense, Nil, "dw", Seq("c"))
+      .withColumn("cum", col("c_lt") + col("c"))
       .crossJoin(broadcast(n))
       .agg(min(col("n_orders")).as("n_orders"),
         coalesce(max(abs(col("cum") * 7L - col("n_orders") * col("dw"))),
@@ -3358,7 +3211,8 @@ object Relational {
     * (groups carry a natural order — the lexical priority rank). J is
     * the sum of pairwise Mann–Whitney counts over ordered group pairs
     * (i < j), doubled so ties stay BIGINT: J·2 = Σ_{i<j} Σ_v
-    * c_j(v)·(2·c_i(<v) + c_i(v)). Everything runs on the DENSE
+    * c_j(v)·(2·c_i(<v) + c_i(v)), with c_i(<v) from [[RankGrid.below]]
+    * keyed by group. Everything runs on the DENSE
     * (group × value) grid (k·|grid| rows — priorities × the ≤ 50
     * quantity grid, never row-scale); the Hollander–Wolfe
     * tie-corrected variance's three components are exact
@@ -3370,7 +3224,6 @@ object Relational {
     * 4·E[J] = N² − Σn_g². */
   def jonckheereTerpstra(orders: DataFrame,
                          lineitem: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val dec = DecimalType(38, 0)
     val xs = lineitem
       .select(col("l_orderkey").as("ok"),
@@ -3383,10 +3236,8 @@ object Relational {
       .crossJoin(cnt.select(col("v")).distinct())
       .join(cnt, Seq("g", "v"), "left")
       .select(col("g"), col("v"), coalesce(col("cnt"), lit(0L)).as("c"))
-    val wG = Window.partitionBy(col("g")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val m = mat.withColumn("clt", coalesce(sum(col("c")).over(wG), lit(0L)))
-      .localCheckpoint()
+    val m = RankGrid.below(mat, Seq("g"), "v", Seq("c"))
+      .withColumnRenamed("c_lt", "clt").localCheckpoint()
     // the dense grid is k·|values| rows (≤ a few hundred) — broadcast
     // one side so the pair census never sort-merges
     val j2 = m.as("mi").join(broadcast(m.as("mj")),
@@ -3432,8 +3283,8 @@ object Relational {
     * survives what breaks [[kruskalWallis]]: gross outliers and wildly
     * unequal variances (only the side of the GRAND median counts, so
     * one corrupted shard cannot drag the statistic). Grand median via
-    * k-th order-statistic selection on the value-grouped grid (the
-    * [[hodgesLehmann]] machinery — no row-level sort); the k×2
+    * k-th order-statistic selection on the value-grouped grid
+    * ([[RankGrid.orderStats]] — no row-level sort); the k×2
     * above/≤ table then replays [[chiSquare]]'s doctrine verbatim:
     * structural cells, integer cross-multiplied residuals, per-cell
     * IEEE terms summed by the SORTED bounded-list fold.
@@ -3442,17 +3293,15 @@ object Relational {
     * ordered; median ties go to '2_le' (v > median is 'above' — the
     * standard convention). */
   def moodMedian(lineitem: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val g = lineitem
       .select(col("l_returnflag").as("grp"),
         col("l_quantity").cast("long").as("v"))
       .groupBy(col("grp"), col("v")).agg(count(lit(1)).as("cnt"))
     val m = g.groupBy(col("v")).agg(sum(col("cnt")).as("m"))
-      .withColumn("cum", sum(col("m")).over(Window.orderBy(col("v"))))
     val tot = g.agg(coalesce(sum(col("cnt")), lit(0L)).as("n"))
-    val med = m.crossJoin(broadcast(tot))
-      .agg(min(when(col("cum") >= expr("(n + 1) div 2"), col("v")))
-        .as("med"))
+    val med = RankGrid.orderStats(m, Nil, "v", "m",
+        tot.select(expr("(n + 1) div 2").as("k")))
+      .agg(min(col("v")).as("med"))
     val cells = g.crossJoin(broadcast(med))
       .groupBy(col("grp"))
       .agg(coalesce(sum(when(col("v") > col("med"), col("cnt"))
@@ -3535,7 +3384,7 @@ object Relational {
     * location). ENGINE-EXACT: the Walsh space is calendar-bounded
     * (grid²/2 — the [[mannKendall]] bound), the median comes from
     * k-th-order-statistic selection on the value-grouped Walsh grid
-    * (cumulative counts, no row-level sort), and the even/odd split
+    * ([[RankGrid.orderStats]], no row-level sort), and the even/odd split
     * stays integer via the ×4 convention: each Walsh sum is already
     * 2·(Walsh average), and hl_x4 = w_(⌈W/2⌉) + w_(⌊W/2⌋+1) doubles
     * again so the even-count midpoint needs no halving.
@@ -3543,52 +3392,28 @@ object Relational {
     * Output: one row (n_diffs, n_walsh, hl_x4). */
   def hodgesLehmann(orders: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val wd = Window.orderBy(col("day"))
     // round 19: the lag-7 diff series is CALENDAR-BOUNDED (one row per
     // grid day) and referenced four times below (both Walsh legs, the
     // n_walsh count, the n_diffs count); materialize it once — the old
     // plan re-ran the orders scan + daily rollup + two windows per
     // reference (2 scans / 10 Window nodes / 5 BNLJ at sf0.01, see
     // plans/r19/stats_hodges_lehmann_before.txt). Values unchanged.
-    val diffs = dailyRevenueSeries(orders)
-      .withColumn("prev", lag(col("x"), 7).over(wd))
-      .filter(col("prev").isNotNull)
-      .select(row_number().over(wd).cast("long").as("i"),
-        (col("x") - col("prev")).as("d"))
+    val diffs = weekOverWeek(dailyRevenueSeries(orders))
+      .select(row_number().over(Window.orderBy(col("day"))).cast("long")
+        .as("i"), col("d"))
       .localCheckpoint()
     val a = diffs.select(col("i").as("ia"), col("d").as("da"))
     val b = diffs.select(col("i").as("ib"), col("d").as("db"))
     val walsh = a.join(broadcast(b), col("ia") <= col("ib"))
       .select((col("da") + col("db")).as("w"))
-    // round 19, two-level order-statistic selection: the old global
-    // `sum(m) over (order by w)` window ran in ONE task over the full
-    // value-grouped Walsh grid (grid²/2 values — the plan's straggler
-    // at any scale; guide §2.5). Values bucket by the MONOTONE
-    // arithmetic shift w >> 20 (floor division by 2^20, negatives
-    // included — every value in bucket b precedes every value in
-    // b+1), the cumulative window runs over the BUCKET rollup (tiny),
-    // and the within-bucket windows touch only the ≤2 buckets that
-    // contain the two target ranks. Selected w1/w2 are bit-identical
-    // to the single-window form.
     val grouped = walsh.groupBy(col("w")).agg(count(lit(1)).as("m"))
-    val byBkt = grouped.withColumn("bkt", shiftright(col("w"), 20))
-    val perB = byBkt.groupBy(col("bkt")).agg(sum(col("m")).as("bm"))
-    val cumB = perB
-      .withColumn("cum_hi", sum(col("bm")).over(Window.orderBy(col("bkt"))))
-      .withColumn("cum_lo", col("cum_hi") - col("bm"))
     // n_walsh from the value groups (ReuseExchange shares the grouped
-    // aggregate with byBkt — the pair enumeration runs once)
+    // aggregate with the rank kernel — the pair enumeration runs once)
     val tot = grouped.agg(coalesce(sum(col("m")), lit(0L)).as("n_walsh"))
     val ks = tot.select(expr(
       "stack(2, 'w1', (n_walsh + 1) div 2, 'w2', n_walsh div 2 + 1) " +
         "AS (which, k)"))
-    val hit = ks.join(broadcast(cumB),
-      col("k") > col("cum_lo") && col("k") <= col("cum_hi"))
-      .select(col("which"), col("k"), col("bkt"), col("cum_lo"))
-    val wv = Window.partitionBy(col("which")).orderBy(col("w"))
-    val sel = byBkt.join(broadcast(hit), Seq("bkt"))
-      .withColumn("cum", col("cum_lo") + sum(col("m")).over(wv))
-      .filter(col("cum") >= col("k"))
+    val sel = RankGrid.orderStats(grouped, Nil, "w", "m", ks)
       .agg(min(when(col("which") === "w1", col("w"))).as("w1"),
         min(when(col("which") === "w2", col("w"))).as("w2"))
     diffs.agg(count(lit(1)).as("n_diffs"))
@@ -3602,8 +3427,8 @@ object Relational {
     * completing [[mannWhitneyU]]'s family upward (MW is its k = 2
     * case): do the return-flag populations carry systematically
     * different quantities? Ranks come from the VALUE-GROUPED quantity
-    * grid (≤ 50 rows — never a row-level sort) with ties at their
-    * average rank via the doubled-rank trick (2·c_lt + m + 1, BIGINT
+    * grid through [[RankGrid.below]] (never a row-level sort) with
+    * ties at their average rank via the doubled-rank trick (2·c_lt + m + 1, BIGINT
     * end to end). The H statistic needs Σ R²_g/n_g — a sum of
     * divisions, so the exact-integer road ends and the [[chiSquare]]
     * doctrine takes over: per-group terms are single IEEE divisions
@@ -3617,17 +3442,13 @@ object Relational {
     * per group, ordered; h and tie_cubes repeat per row (the
     * [[friedmanTest]] shape). */
   def kruskalWallis(lineitem: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val g = lineitem
       .select(col("l_returnflag").as("grp"),
         col("l_quantity").cast("long").as("v"))
       .groupBy(col("grp"), col("v")).agg(count(lit(1)).as("cnt"))
     val m = g.groupBy(col("v")).agg(sum(col("cnt")).as("m"))
-    val w = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val dr = m
-      .withColumn("clt", coalesce(sum(col("m")).over(w), lit(0L)))
-      .select(col("v"), (col("clt") * 2 + col("m") + 1L).as("dr"))
+    val dr = RankGrid.below(m, Nil, "v", Seq("m"))
+      .select(col("v"), (col("m_lt") * 2 + col("m") + 1L).as("dr"))
     val sums = g.join(broadcast(dr), Seq("v"))
       .groupBy(col("grp"))
       .agg(sum(col("cnt")).as("n"),
@@ -3662,37 +3483,24 @@ object Relational {
     * says "by how much, distribution-free"): δ = (#(a > b) −
     * #(a < b)) / (n_a·n_b) over all cross pairs of the click and
     * purchase value distributions. ENGINE-EXACT: the pair census
-    * comes from the value-grouped cents grid via cumulative counts
-    * (rows at value v beat cb_lt(v) b-rows and lose to n_b −
-    * cb_le(v)) — never a materialized cross join; the ppm readout is
+    * comes from the value-grouped cents grid via the cumulative
+    * counts of [[RankGrid.below]] (rows at value v beat cb_lt(v) b-rows
+    * and lose to n_b − cb_le(v)) — never a materialized cross join; the
+    * ppm readout is
     * one truncating division with DECIMAL(38,0) headroom (n_gt·10⁶
     * overflows int64 exactly at warehouse pair counts).
     *
     * Output: one row (n_a, n_b, n_gt, n_lt, n_tie, delta_ppm). */
   def cliffsDelta(events: DataFrame, typeA: String = "click",
-                  typeB: String = "purchase"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cents = (col("value").cast(DecimalType(12, 2)) * 100).cast("long")
-    val t = col("event_type")
-    val g = events.filter(t === typeA || t === typeB)
-      .select(t.as("ty"), cents.as("c"))
-      .groupBy(col("c"))
-      .agg(sum(when(col("ty") === typeA, 1L).otherwise(0L)).as("na"),
-        sum(when(col("ty") === typeB, 1L).otherwise(0L)).as("nb"))
-    val wLt = Window.orderBy(col("c"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wLe = Window.orderBy(col("c"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wAll = Window.orderBy(col("c"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    g.withColumn("cbLt", coalesce(sum(col("nb")).over(wLt), lit(0L)))
-      .withColumn("cbLe", sum(col("nb")).over(wLe))
-      .withColumn("nbTot", sum(col("nb")).over(wAll))
+                  typeB: String = "purchase"): DataFrame =
+    RankGrid.below(RankGrid.twoArmCents(events, typeA, typeB), Nil, "c",
+        Seq("na", "nb"))
       .agg(coalesce(sum(col("na")), lit(0L)).as("n_a"),
         coalesce(sum(col("nb")), lit(0L)).as("n_b"),
-        coalesce(sum(col("na") * col("cbLt")), lit(0L)).as("n_gt"),
-        coalesce(sum(col("na") * (col("nbTot") - col("cbLe"))), lit(0L))
-          .as("n_lt"))
+        coalesce(sum(col("na") * col("nb_lt")), lit(0L)).as("n_gt"),
+        coalesce(sum(col("na") * (col("nb_lt") + col("nb"))), lit(0L))
+          .as("n_le"))
+      .withColumn("n_lt", col("n_a") * col("n_b") - col("n_le"))
       .select(col("n_a"), col("n_b"), col("n_gt"), col("n_lt"),
         (col("n_a") * col("n_b") - col("n_gt") - col("n_lt")).as("n_tie"),
         expr("CAST(CASE WHEN n_gt >= n_lt THEN " +
@@ -3701,7 +3509,6 @@ object Relational {
           "ELSE -((CAST(n_lt - n_gt AS DECIMAL(38,0)) * 1000000) div " +
           "nullif(CAST(n_a AS DECIMAL(38,0)) * n_b, 0)) END AS BIGINT)")
           .as("delta_ppm"))
-  }
 
   /** DAY-OVER-DAY CHANGE in basis points (round 16) — the growth-rate
     * face of the daily revenue series beside [[drawdownSeries]]'
@@ -3768,35 +3575,18 @@ object Relational {
     * top-share curve: G = (2·Σᵢ i·xᵢ − (n+1)·Σx) / (n·Σx) over the
     * ascending-sorted order totals. ENGINE-EXACT: totals move to exact
     * cents and the rank-weighted sum folds over the VALUE-GROUPED
-    * table (one row per distinct cent total — the bounded-grid
-    * prefix-sum doctrine of [[mannWhitneyU]]): rows of value v occupy
-    * ranks [c_lt+1, c_lt+cnt], so their Σ i·xᵢ contribution is
-    * v·(cnt·c_lt + cnt·(cnt+1)/2) — all BIGINT; the final G is ONE
-    * IEEE division of two exact integers.
+    * table (one row per distinct cent total) in [[RankGrid.gini]]:
+    * rows of value v occupy ranks [c_lt+1, c_lt+cnt], so their Σ i·xᵢ
+    * contribution is v·(cnt·c_lt + cnt·(cnt+1)/2) — all BIGINT; the
+    * final G is ONE IEEE division of two exact integers.
     *
     * Output (one row): n_orders, sum_cents, gini_num (= 2Σi·x −
     * (n+1)·Σx, exact), gini. */
   def orderGini(orders: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cents = (col("o_totalprice").cast(DecimalType(12, 2)) * 100)
       .cast("long")
-    val g = orders.select(cents.as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
-    val w = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    g.withColumn("clt", coalesce(sum(col("cnt")).over(w), lit(0L)))
-      .agg(coalesce(sum(col("cnt")), lit(0L)).as("n_orders"),
-        coalesce(sum(col("v") * col("cnt")), lit(0L)).as("sum_cents"),
-        // cnt·(cnt+1) is always even → the integer div is exact; Spark's
-        // `/` on longs would promote to double
-        coalesce(sum(col("v") * (col("cnt") * col("clt") +
-          expr("(cnt * (cnt + 1)) div 2"))), lit(0L)).as("rw"))
-      .select(col("n_orders"), col("sum_cents"),
-        (lit(2L) * col("rw") - (col("n_orders") + 1L) * col("sum_cents"))
-          .as("gini_num"))
-      .select(col("n_orders"), col("sum_cents"), col("gini_num"),
-        (col("gini_num").cast("double") /
-          expr("nullif(n_orders * sum_cents, 0)")).as("gini"))
+    RankGrid.gini(orders.select(cents.as("v"))
+      .groupBy(col("v")).agg(count(lit(1)).as("cnt")), "n_orders", "sum_cents")
   }
 
   /** USER-PARTICIPATION GINI (round 16) — inequality of the per-user
@@ -3804,30 +3594,15 @@ object Relational {
     * "active users" is a community or three bots ([[orderGini]]'s
     * machinery pointed at engagement instead of spend, and the events
     * twin of `graph_degree_gini`). Per-user counts first (map-side
-    * combinable), then the value-grouped doubled-rank fold over the
-    * BOUNDED count grid — one row per distinct activity level, so the
-    * ordered window never sees user-scale data — and ONE IEEE division
-    * at the end.
+    * combinable), then the [[RankGrid.gini]] fold over the BOUNDED
+    * count grid — one row per distinct activity level, so the rank
+    * kernel never sees user-scale data — and ONE IEEE division at the
+    * end.
     *
     * Output (one row): n_users, n_events, gini_num, gini. */
-  def userActivityGini(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val per = events.groupBy(col("user_id")).agg(count(lit(1)).as("v"))
-    val g = per.groupBy(col("v")).agg(count(lit(1)).as("cnt"))
-    val w = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    g.withColumn("clt", coalesce(sum(col("cnt")).over(w), lit(0L)))
-      .agg(coalesce(sum(col("cnt")), lit(0L)).as("n_users"),
-        coalesce(sum(col("v") * col("cnt")), lit(0L)).as("n_events"),
-        coalesce(sum(col("v") * (col("cnt") * col("clt") +
-          expr("(cnt * (cnt + 1)) div 2"))), lit(0L)).as("rw"))
-      .select(col("n_users"), col("n_events"),
-        (lit(2L) * col("rw") - (col("n_users") + 1L) * col("n_events"))
-          .as("gini_num"))
-      .select(col("n_users"), col("n_events"), col("gini_num"),
-        (col("gini_num").cast("double") /
-          expr("nullif(n_users * n_events, 0)")).as("gini"))
-  }
+  def userActivityGini(events: DataFrame): DataFrame =
+    RankGrid.gini(events.groupBy(col("user_id")).agg(count(lit(1)).as("v"))
+      .groupBy(col("v")).agg(count(lit(1)).as("cnt")), "n_users", "n_events")
 
   /** MANN-WHITNEY U (round 13) — the RANK-based two-sample test next
     * to [[welchT2]]'s parametric one: robust to the heavy-tailed value
@@ -3835,8 +3610,7 @@ object Relational {
     * driven by outliers. ENGINE-EXACT BY CONSTRUCTION: values move to
     * exact cents, ranking happens on the VALUE-GROUPED table (one row
     * per distinct cent value — bounded by the price grid, not the row
-    * count, so the one ordered prefix-sum window runs over a bounded
-    * frame; the [[bootstrapCi]] ranking precedent), and tied ranks use
+    * count — through [[RankGrid.below]]), and tied ranks use
     * the DOUBLED average rank 2·c_lt + t + 1 so every accumulation is
     * a BIGINT — no half-rank floats anywhere. The AUC statistic
     * (P(A > B) + ½P(A = B), the common-language effect size) is ONE
@@ -3845,29 +3619,17 @@ object Relational {
     * Output (one row): n_a, n_b, r2x_a (doubled rank sum of sample A),
     * u2x_a (doubled U_A), auc_a. */
   def mannWhitneyU(events: DataFrame, typeA: String = "click",
-                   typeB: String = "purchase"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cents = (col("value").cast(DecimalType(12, 2)) * 100).cast("long")
-    val t = col("event_type")
-    val g = events.filter(t === typeA || t === typeB)
-      .select(t.as("ty"), cents.as("c"))
-      .groupBy(col("c"))
-      .agg(sum(when(col("ty") === typeA, 1L).otherwise(0L)).as("na"),
-        sum(when(col("ty") === typeB, 1L).otherwise(0L)).as("nb"))
-    val w = Window.orderBy(col("c"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    g.withColumn("clt",
-        coalesce(sum(col("na") + col("nb")).over(w), lit(0L)))
+                   typeB: String = "purchase"): DataFrame =
+    RankGrid.below(RankGrid.twoArmCents(events, typeA, typeB), Nil, "c",
+        Seq("na", "nb"))
       .agg(coalesce(sum(col("na")), lit(0L)).as("n_a"),
         coalesce(sum(col("nb")), lit(0L)).as("n_b"),
-        coalesce(sum(col("na") *
-          (col("clt") * 2L + col("na") + col("nb") + 1L)), lit(0L))
-          .as("r2x_a"))
+        coalesce(sum(col("na") * ((col("na_lt") + col("nb_lt")) * 2L +
+          col("na") + col("nb") + 1L)), lit(0L)).as("r2x_a"))
       .select(col("n_a"), col("n_b"), col("r2x_a"),
         (col("r2x_a") - col("n_a") * (col("n_a") + 1L)).as("u2x_a"),
         ((col("r2x_a") - col("n_a") * (col("n_a") + 1L)).cast("double") /
           expr("nullif(n_a * n_b * 2, 0)")).as("auc_a"))
-  }
 
   /** KOLMOGOROV–SMIRNOV two-sample D (round 13) — the DISTRIBUTION-
     * shape companion of [[mannWhitneyU]]'s location test: the largest
@@ -3876,29 +3638,19 @@ object Relational {
     * and serving windows). Same exact-cents value-grouped front; the
     * supremum is computed in the INTEGER domain — D·n_a·n_b =
     * max |c1·n_b − c2·n_a| over the value grid (cumulative counts
-    * from the bounded prefix-sum window) — and divides once into the
+    * from [[RankGrid.below]]) — and divides once into the
     * double D at the end.
     *
     * Output (one row): n_a, n_b, d_scaled (= D·n_a·n_b, exact), d. */
   def ksTest(events: DataFrame, typeA: String = "click",
              typeB: String = "purchase"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cents = (col("value").cast(DecimalType(12, 2)) * 100).cast("long")
-    val t = col("event_type")
-    val g = events.filter(t === typeA || t === typeB)
-      .select(t.as("ty"), cents.as("c"))
-      .groupBy(col("c"))
-      .agg(sum(when(col("ty") === typeA, 1L).otherwise(0L)).as("na"),
-        sum(when(col("ty") === typeB, 1L).otherwise(0L)).as("nb"))
+    val g = RankGrid.twoArmCents(events, typeA, typeB)
     val tot = g.agg(coalesce(sum(col("na")), lit(0L)).as("n_a"),
       coalesce(sum(col("nb")), lit(0L)).as("n_b"))
-    val w = Window.orderBy(col("c"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val sup = g.withColumn("c1", sum(col("na")).over(w))
-      .withColumn("c2", sum(col("nb")).over(w))
+    val sup = RankGrid.below(g, Nil, "c", Seq("na", "nb"))
       .crossJoin(broadcast(tot))
-      .agg(coalesce(max(abs(col("c1") * col("n_b") -
-        col("c2") * col("n_a"))), lit(0L)).as("d_scaled"))
+      .agg(coalesce(max(abs((col("na_lt") + col("na")) * col("n_b") -
+        (col("nb_lt") + col("nb")) * col("n_a"))), lit(0L)).as("d_scaled"))
     sup.crossJoin(broadcast(tot))
       .select(col("n_a"), col("n_b"), col("d_scaled"),
         (col("d_scaled").cast("double") /
@@ -3922,12 +3674,11 @@ object Relational {
     * feed or truncating scraper moves mass across octaves. The grid ×
     * source matrix is dense by construction (a source missing a
     * bucket still carries its cumulative there), built from two
-    * bounded relations, cumulated by one per-source window pass + one
-    * grid-wide pass; ONE IEEE division per source at the end.
+    * bounded relations, cumulated by [[RankGrid.below]] per source and
+    * once grid-wide; ONE IEEE division per source at the end.
     *
     * Output: (source, n_docs, n_rest, d_scaled, d), ordered. */
   def lengthDriftBySource(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cnt = docs.groupBy(col("source"),
         expr("CAST(length(bin(greatest(n_chars, 1L))) AS BIGINT)").as("v"))
       .agg(count(lit(1)).as("cn"))
@@ -3935,15 +3686,13 @@ object Relational {
       .crossJoin(cnt.select(col("v")).distinct())
       .join(cnt, Seq("source", "v"), "left")
       .select(col("source"), col("v"), coalesce(col("cn"), lit(0L)).as("a"))
-    val wS = Window.partitionBy(col("source")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wV = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val ct = cnt.groupBy(col("v")).agg(sum(col("cn")).as("t"))
-      .withColumn("ct", sum(col("t")).over(wV)).select(col("v"), col("ct"))
+    val ct = RankGrid.below(cnt.groupBy(col("v")).agg(sum(col("cn")).as("t")),
+        Nil, "v", Seq("t"))
+      .select(col("v"), (col("t_lt") + col("t")).as("ct"))
     val nA = cnt.groupBy(col("source")).agg(sum(col("cn")).as("n_docs"))
     val nT = cnt.agg(coalesce(sum(col("cn")), lit(0L)).as("n_total"))
-    mat.withColumn("ca", sum(col("a")).over(wS))
+    RankGrid.below(mat, Seq("source"), "v", Seq("a"))
+      .withColumn("ca", col("a_lt") + col("a"))
       .join(broadcast(ct), "v")
       .join(broadcast(nA), "source")
       .crossJoin(broadcast(nT))
@@ -4012,37 +3761,32 @@ object Relational {
     * mean-based original is fragile exactly when it matters).
     * ENGINE-EXACT: deviations are DOUBLED-median integers
     * z = |2c − med2| (med2 = the two middle values' sum over the
-    * VALUE-GROUPED cents grid — rank selection on the grid, the
-    * mannwhitney doctrine, so no per-row sort and no halving division),
+    * VALUE-GROUPED cents grid — [[RankGrid.orderStats]] selection on
+    * the grid, so no per-row sort and no halving division),
     * then the SAME pivoted n/s/q aggregation and the SAME
     * [[AnovaTail]] fixed-order double tree as `stats_anova` (doubling
     * z scales SSB and SSW by 4 — F is invariant, and both engines run
     * the identical tree). Σz² in DECIMAL(38,0).
     *
-    * Scale shape: one value-grouped aggregation (grid-bounded windows,
-    * partitioned by type), a broadcast ≤k-row median join, one pivoted
-    * full-data aggregation. Output (one row): k_groups, n_total,
+    * Scale shape: one value-grouped aggregation (the rank kernel's
+    * windows, partitioned by type), a broadcast ≤k-row median join,
+    * one pivoted full-data aggregation. Output (one row): k_groups, n_total,
     * ss_between, ss_within, f_stat — on the z relation. */
   def leveneBrownForsythe(events: DataFrame,
                           types: Seq[String] = AnovaTypes): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val qdec = DecimalType(38, 0)
     val cents = (col("value").cast(DecimalType(12, 2)) * 100).cast("long")
     val base = events.filter(col("event_type").isin(types: _*))
       .select(col("event_type").as("ty"), cents.as("c"))
     val vg = base.groupBy(col("ty"), col("c").as("v"))
       .agg(count(lit(1)).as("m"))
-    val wCum = Window.partitionBy(col("ty")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.partitionBy(col("ty"))
-    val cum = vg.withColumn("cm", sum(col("m")).over(wCum))
-      .withColumn("n", sum(col("m")).over(wAll))
-    val lo = cum.filter(expr("cm >= (n + 1) div 2"))
-      .groupBy(col("ty")).agg(min(col("v")).as("v_lo"))
-    val hi = cum.filter(expr("cm >= n div 2 + 1"))
-      .groupBy(col("ty")).agg(min(col("v")).as("v_hi"))
-    val med = lo.join(hi, "ty")
-      .select(col("ty"), (col("v_lo") + col("v_hi")).as("med2"))
+    val ranks = vg.groupBy(col("ty")).agg(sum(col("m")).as("n"))
+      .select(col("ty"),
+        expr("stack(2, 'lo', (n + 1) div 2, 'hi', n div 2 + 1) AS (which, k)"))
+    val med = RankGrid.orderStats(vg, Seq("ty"), "v", "m", ranks)
+      .groupBy(col("ty"))
+      .agg((min(when(col("which") === "lo", col("v"))) +
+        min(when(col("which") === "hi", col("v")))).as("med2"))
     val z = base.join(broadcast(med), "ty")
       .select(col("ty"), abs(lit(2L) * col("c") - col("med2")).as("c"))
     val aggs = types.flatMap { ty =>
@@ -5758,31 +5502,27 @@ object Relational {
     * per distinct cent value its multiplicity and cumulative rank,
     * each group's clipped contribution `m − clip_low − clip_high`
     * where clip_low = max(0, min(m, k − ranks_below)) (and mirrored
-    * above) — no row-level sort, the window runs over the bounded
-    * value grid. Integer sums in DECIMAL; ONE exact div tail. NULL
+    * above) — no row-level sort; ranks_below comes from
+    * [[RankGrid.below]]. Integer sums in DECIMAL; ONE exact div tail. NULL
     * when n − 2k = 0.
     *
     * Output: (event_type, n, k_trim, trimmed_n, trimmed_mean_ppm),
     * ordered. */
   def trimmedMean(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val dec = DecimalType(38, 0)
     val c = (dec2(col("value")) * 100).cast("long")
     val g = events.filter(col("event_type").isNotNull)
       .select(col("event_type"), c.as("c"))
       .groupBy(col("event_type"), col("c"))
       .agg(count(lit(1)).as("m"))
-    val w = Window.partitionBy(col("event_type")).orderBy(col("c"))
-      .rowsBetween(Window.unboundedPreceding, 0)
     val tot = g.groupBy(col("event_type")).agg(sum(col("m")).as("n"))
-    g.withColumn("cum", sum(col("m")).over(w))
+    RankGrid.below(g, Seq("event_type"), "c", Seq("m"))
       .join(broadcast(tot), "event_type")
       .withColumn("k", expr("n div 10"))
-      .withColumn("below", col("cum") - col("m"))
       .withColumn("clip_lo",
-        greatest(lit(0L), least(col("m"), col("k") - col("below"))))
-      .withColumn("clip_hi",
-        greatest(lit(0L), least(col("m"), col("k") - (col("n") - col("cum")))))
+        greatest(lit(0L), least(col("m"), col("k") - col("m_lt"))))
+      .withColumn("clip_hi", greatest(lit(0L),
+        least(col("m"), col("k") - (col("n") - col("m_lt") - col("m")))))
       .groupBy(col("event_type"), col("n"), col("k"))
       .agg(sum((col("c").cast(dec)) *
         (col("m") - col("clip_lo") - col("clip_hi"))).as("tsum"))

@@ -188,7 +188,7 @@ object StreamingDedup {
       batch.select(col("doc_id"), col("ts"),
         Dedup.minHashSig(col("text"), n, numHashes).as("sig")),
       numHashes, rowsPerBand, SigCols).persist()
-    val manifest = readManifest(spark, storeDir, batchId)
+    val (replayVer, manifest) = resolveManifest(spark, storeDir, batchId)
     val storeBands = Dedup.bandRows(liveSigs(spark, storeDir, manifest),
       numHashes, rowsPerBand, SigCols)
 
@@ -283,10 +283,11 @@ object StreamingDedup {
     suppressed.unpersist(blocking = false)
 
     // GC: batch N+1 reads manifest v=N; a replayed batch N re-reads
-    // v=N-1 — so every segment referenced by the last two manifests
-    // must stay, and nothing else can ever be read again. Manifests
-    // older than N-1 are dropped with them.
-    pruneStore(spark, storeDir, batchId)
+    // the one this batch read — so every segment those two manifests
+    // reference must stay, and nothing else can ever be read again.
+    // Older manifests are dropped with them.
+    pruneStore(spark, storeDir, batchId, replayVer,
+      (newManifest ++ manifest).map(_.seg).toSet)
   }
 
   /** One live-segment row of the store manifest: the segment's id, its
@@ -328,28 +329,37 @@ object StreamingDedup {
       readManifest(spark, storeDir, batchId)), 64, 4, SigCols)
 
   /** Live segments of the largest committed manifest strictly below
-    * `batchId`; empty when the store has no usable manifest yet.
+    * `batchId`; empty when the store has no usable manifest yet. */
+  private[graft] def readManifest(spark: SparkSession, storeDir: String,
+                                      batchId: Long): Seq[StoreSegment] =
+    resolveManifest(spark, storeDir, batchId)._2
+
+  /** The version of a `manifest/` entry named `v=N`. */
+  private def manifestVersion(name: String): Option[Long] =
+    if (name.startsWith("v=")) scala.util.Try(name.drop(2).toLong).toOption
+    else None
+
+  /** The largest committed manifest version strictly below `batchId`
+    * and its live segments; (None, empty) when there is none.
     *
     * The manifest is ≤ maxSegments rows — it is read and written
     * DRIVER-SIDE as a single tab-separated file (round 16; a Spark job
     * per manifest read/write was a fixed per-micro-batch cost that
     * dominated at small batches and buys nothing at any scale: the
     * manifest is bounded by `maxSegments`, never by data volume). */
-  private[graft] def readManifest(spark: SparkSession, storeDir: String,
-                                      batchId: Long): Seq[StoreSegment] = {
+  private def resolveManifest(
+      spark: SparkSession, storeDir: String,
+      batchId: Long): (Option[Long], Seq[StoreSegment]) = {
     val root = new org.apache.hadoop.fs.Path(s"$storeDir/manifest")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions =
-      if (!fs.exists(root)) Array.empty[Long]
-      else fs.listStatus(root).map(_.getPath.getName)
-        .flatMap(s => if (s.startsWith("v="))
-          scala.util.Try(s.drop(2).toLong).toOption else None)
-        .filter(_ < batchId)
-    if (versions.isEmpty) Seq.empty
-    else {
-      val p = new org.apache.hadoop.fs.Path(
-        s"$storeDir/manifest/v=${versions.max}")
-      val in = fs.open(p)
+    val version =
+      if (!fs.exists(root)) None
+      else fs.listStatus(root)
+        .flatMap(st => manifestVersion(st.getPath.getName))
+        .filter(_ < batchId).maxOption
+    val segs = version.fold(Seq.empty[StoreSegment]) { v =>
+      val in =
+        fs.open(new org.apache.hadoop.fs.Path(s"$storeDir/manifest/v=$v"))
       val lines =
         try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
         finally in.close()
@@ -360,6 +370,7 @@ object StreamingDedup {
           new java.sql.Timestamp(f(2).toLong))
       }.sortBy(_.seg)
     }
+    (version, segs)
   }
 
   /** Driver-side single-file manifest commit: write to a dot-prefixed
@@ -383,39 +394,26 @@ object StreamingDedup {
     ()
   }
 
-  /** GC after manifest v=`batchId` commits: keep segments referenced by
-    * the two manifests that can still be read (v=batchId serves batch
-    * N+1; the manifest `readManifest(batchId)` RESOLVES — the largest
-    * v < batchId — serves a replay of batch N) and those two manifests;
-    * delete the rest. The replay-input version is resolved, NOT assumed
-    * to be batchId−1: an empty micro-batch is skipped without writing a
-    * manifest, so version gaps are normal and a numeric batchId−1 rule
-    * would delete the very manifest a crash-replay of batch N needs
-    * (re-admitting duplicates). Deletion failures and foreign entries
-    * are non-fatal — a leftover is never read, only re-collected next
-    * batch. */
+  /** GC after manifest v=`batchId` commits: keep the segments in
+    * `keep` (those referenced by v=batchId, which serves batch N+1, and
+    * by the manifest batch N read, which serves a replay of batch N),
+    * those two manifests, and delete the rest. The replay-input version
+    * `replayVer` is the RESOLVED one (the largest v < batchId), NOT
+    * assumed to be batchId−1: an empty micro-batch is skipped without
+    * writing a manifest, so version gaps are normal and a numeric
+    * batchId−1 rule would delete the very manifest a crash-replay of
+    * batch N needs (re-admitting duplicates). Deletion failures and
+    * foreign entries are non-fatal — a leftover is never read, only
+    * re-collected next batch. */
   private def pruneStore(spark: SparkSession, storeDir: String,
-                         batchId: Long): Unit = {
+                         batchId: Long, replayVer: Option[Long],
+                         keep: Set[Long]): Unit = {
     val root = new org.apache.hadoop.fs.Path(storeDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def rm(p: org.apache.hadoop.fs.Path): Unit =
       try { fs.delete(p, true); () }
       catch { case _: java.io.IOException => () }
-    // the replay-input manifest version, resolved the same way
-    // readManifest resolves it (largest committed v strictly below N)
-    val replayVer: Option[Long] = {
-      val mroot = new org.apache.hadoop.fs.Path(s"$storeDir/manifest")
-      if (!fs.exists(mroot)) None
-      else fs.listStatus(mroot).map(_.getPath.getName)
-        .flatMap(s => if (s.startsWith("v="))
-          scala.util.Try(s.drop(2).toLong).toOption else None)
-        .filter(_ < batchId)
-        .reduceOption((a: Long, b: Long) => math.max(a, b))
-    }
     val keepVers: Set[Long] = Set(batchId) ++ replayVer
-    val keep: Set[Long] =
-      (readManifest(spark, storeDir, batchId + 1) ++
-        readManifest(spark, storeDir, batchId)).map(_.seg).toSet
     if (fs.exists(root)) fs.listStatus(root).foreach { st =>
       val nm = st.getPath.getName
       if (nm.startsWith("seg=")) {
@@ -427,9 +425,7 @@ object StreamingDedup {
     }
     val mroot = new org.apache.hadoop.fs.Path(s"$storeDir/manifest")
     if (fs.exists(mroot)) fs.listStatus(mroot).foreach { st =>
-      val nm = st.getPath.getName
-      val ver = if (nm.startsWith("v="))
-        scala.util.Try(nm.drop(2).toLong).toOption else None
+      val ver = manifestVersion(st.getPath.getName)
       if (ver.exists(v => !keepVers.contains(v))) rm(st.getPath)
     }
   }

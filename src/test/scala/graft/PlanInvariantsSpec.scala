@@ -830,6 +830,25 @@ class PlanInvariantsSpec extends SparkSpec {
     }
   }
 
+  test("rank kernel: the value-grid statistics never sort a value " +
+    "column in one task — every window is partitioned or orders only " +
+    "the bucket rollup (VERDICT r20 item 7)") {
+    import org.apache.spark.sql.execution.window.WindowExec
+    Seq("stats_ks", "stats_ks_uniform", "stats_trimmed_mean",
+      "stats_mannwhitney", "stats_cliffs_delta", "order_gini").foreach { q =>
+      val p = withAqeOff {
+        try SparkEntry.queries(q)(spark, sf0).queryExecution.executedPlan
+        finally SparkEntry.harnessScope.release()
+      }
+      val wins = p.collect { case w: WindowExec => w }
+      assert(wins.nonEmpty, s"$q lost its rank windows")
+      wins.foreach(w => assert(w.partitionSpec.nonEmpty ||
+        w.orderSpec.forall(_.child.references
+          .forall(_.name == graft.operators.RankGrid.Bkt)),
+        s"$q sorts a value column in one task:\n$w"))
+    }
+  }
+
   test("round-16 closing cohort: transitivity aggregates the memo edge " +
     "list (scalar attaches broadcast), Mood's median grid never " +
     "sort-merges, gap census windows only the bounded calendar") {
