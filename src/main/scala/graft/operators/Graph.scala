@@ -635,8 +635,8 @@ object Graph {
                  edges0: Option[DataFrame] = None): DataFrame = {
     val e = edges0.getOrElse(coOrderEdges(lineitem))
       .select(col("a"), col("b"))
-    RankGrid.gini(nodeDegrees(e).groupBy(col("deg").as("v"))
-      .agg(count(lit(1)).as("cnt")), "n_nodes", "sum_degree")
+    RankGrid.gini(RankGrid.below(nodeDegrees(e).groupBy(col("deg").as("v"))
+      .agg(count(lit(1)).as("cnt")), Nil, "v", Seq("cnt")), "n_nodes", "sum_degree")
   }
 
   /** EDGE-WEIGHT HISTOGRAM (round 14) — the distribution that SIZES

@@ -446,14 +446,17 @@ object Relational {
       .drop("n_vals")
     val nrow = docs.agg(count(lit(1)).as("n"),
       min(col("n_chars")).as("lo"), max(col("n_chars")).as("hi"))
-    RankGrid.quartiles(counts, Nil, nrow.select(col("n")))
+    RankGrid.quartiles(Nil, nrow.select(col("n")))(
+        RankGrid.orderStats(counts, Nil, "v", "cnt", _))
       .crossJoin(nrow.select(col("lo"), col("hi")))
   }
 
   /** Per-GROUP exact type-7 quantiles — [[lengthQuantiles]] generalized
     * from one global distribution to one per `o_orderpriority`, over
     * order totals in EXACT integer cents (the [[priceHistogram]]
-    * domain). Same [[RankGrid.quartiles]] readout, keyed by group, so
+    * domain). Same [[RankGrid.quartiles]] readout, keyed by group and
+    * selected by [[RankGrid.orderStatsBucketed]] (the distinct order
+    * totals grow with the data and span many buckets), so
     * the per-group quartiles hash-match the oracle even on fractional
     * positions. Output: (grp, n, p25, p50, p75, p90, lo, hi) ordered. */
   def groupQuantiles(orders: DataFrame): DataFrame = {
@@ -463,7 +466,8 @@ object Relational {
       .agg(count(lit(1)).as("cnt"))
     val nrow = base.groupBy(col("grp")).agg(count(lit(1)).as("n"),
       min(col("v")).as("lo"), max(col("v")).as("hi"))
-    RankGrid.quartiles(counts, Seq("grp"), nrow.select(col("grp"), col("n")))
+    RankGrid.quartiles(Seq("grp"), nrow.select(col("grp"), col("n")))(
+        RankGrid.orderStatsBucketed(counts, Seq("grp"), "v", "cnt", _))
       .join(nrow, "grp")
       .select(col("grp"), col("n"), col("p25"), col("p50"), col("p75"),
         col("p90"), col("lo"), col("hi"))
@@ -2394,8 +2398,7 @@ object Relational {
         sum(when(col("d") > 0L, 1L).otherwise(0L)).as("mpos"))
     // average rank of the tie group, doubled: 2·c_lt + m + 1
     val dr = col("m_lt") * 2 + col("m") + 1L
-    // mpos rides through the kernel as a second count column
-    val stats = RankGrid.below(groups, Nil, "ad", Seq("m", "mpos")).agg(
+    val stats = RankGrid.below(groups, Nil, "ad", Seq("m")).agg(
       coalesce(sum(col("m")), lit(0L)).as("n_nonzero"),
       coalesce(sum(col("mpos") * dr), lit(0L)).as("w_plus_doubled"),
       coalesce(sum((col("m") - col("mpos")) * dr), lit(0L))
@@ -2758,8 +2761,9 @@ object Relational {
     * (rank sums overflow int64 at warehouse scale), and the final
     * Pearson-on-ranks expression goes through the decimal→STRING→
     * double bridge ([[groupedCorrelation]]'s bit-identity trick) with
-    * one fixed operation tree. The quantity grid (integral 1..50)
-    * broadcasts; the price grid joins on the cents key.
+    * one fixed operation tree. The quantity grid (integral 1..50, one
+    * window) broadcasts; the price grid (cents, which grow with the
+    * data: [[RankGrid.belowBucketed]]) joins on the cents key.
     *
     * Output (one row): n, spearman_rho. */
   def spearmanCorr(lineitem: DataFrame): DataFrame = {
@@ -2767,15 +2771,16 @@ object Relational {
       col("l_quantity").cast("long").as("x"),
       (col("l_extendedprice").cast(DecimalType(12, 2)) * 100).cast("long")
         .as("y"))
-    def rankTable(c: String) =
-      RankGrid.below(rows.groupBy(col(c)).agg(count(lit(1)).as("cnt")),
-          Nil, c, Seq("cnt"))
-        .select(col(c), (col("cnt_lt") * 2L + col("cnt") + 1L).as(s"r_$c"))
+    def grid(c: String) = rows.groupBy(col(c)).agg(count(lit(1)).as("cnt"))
+    def rankTable(ranked: DataFrame, c: String) =
+      ranked.select(col(c), (col("cnt_lt") * 2L + col("cnt") + 1L).as(s"r_$c"))
     val dec = DecimalType(38, 0)
     def d(c: Column) = c.cast("string").cast("double")
     rows
-      .join(broadcast(rankTable("x")), "x")
-      .join(rankTable("y"), "y")
+      .join(broadcast(rankTable(
+        RankGrid.below(grid("x"), Nil, "x", Seq("cnt")), "x")), "x")
+      .join(rankTable(
+        RankGrid.belowBucketed(grid("y"), Nil, "y", Seq("cnt")), "y"), "y")
       .agg(count(lit(1)).as("n"),
         sum(col("r_x").cast(dec)).as("sx"),
         sum(col("r_y").cast(dec)).as("sy"),
@@ -3384,7 +3389,8 @@ object Relational {
     * location). ENGINE-EXACT: the Walsh space is calendar-bounded
     * (grid²/2 — the [[mannKendall]] bound), the median comes from
     * k-th-order-statistic selection on the value-grouped Walsh grid
-    * ([[RankGrid.orderStats]], no row-level sort), and the even/odd split
+    * ([[RankGrid.orderStatsBucketed]]: the Walsh grid grows as the
+    * calendar's square and spans many buckets), and the even/odd split
     * stays integer via the ×4 convention: each Walsh sum is already
     * 2·(Walsh average), and hl_x4 = w_(⌈W/2⌉) + w_(⌊W/2⌋+1) doubles
     * again so the even-count midpoint needs no halving.
@@ -3413,7 +3419,7 @@ object Relational {
     val ks = tot.select(expr(
       "stack(2, 'w1', (n_walsh + 1) div 2, 'w2', n_walsh div 2 + 1) " +
         "AS (which, k)"))
-    val sel = RankGrid.orderStats(grouped, Nil, "w", "m", ks)
+    val sel = RankGrid.orderStatsBucketed(grouped, Nil, "w", "m", ks)
       .agg(min(when(col("which") === "w1", col("w"))).as("w1"),
         min(when(col("which") === "w2", col("w"))).as("w2"))
     diffs.agg(count(lit(1)).as("n_diffs"))
@@ -3575,7 +3581,8 @@ object Relational {
     * top-share curve: G = (2·Σᵢ i·xᵢ − (n+1)·Σx) / (n·Σx) over the
     * ascending-sorted order totals. ENGINE-EXACT: totals move to exact
     * cents and the rank-weighted sum folds over the VALUE-GROUPED
-    * table (one row per distinct cent total) in [[RankGrid.gini]]:
+    * table (one row per distinct cent total, which grows with the
+    * orders — hence [[RankGrid.belowBucketed]]) in [[RankGrid.gini]]:
     * rows of value v occupy ranks [c_lt+1, c_lt+cnt], so their Σ i·xᵢ
     * contribution is v·(cnt·c_lt + cnt·(cnt+1)/2) — all BIGINT; the
     * final G is ONE IEEE division of two exact integers.
@@ -3585,8 +3592,9 @@ object Relational {
   def orderGini(orders: DataFrame): DataFrame = {
     val cents = (col("o_totalprice").cast(DecimalType(12, 2)) * 100)
       .cast("long")
-    RankGrid.gini(orders.select(cents.as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("cnt")), "n_orders", "sum_cents")
+    RankGrid.gini(RankGrid.belowBucketed(orders.select(cents.as("v"))
+      .groupBy(col("v")).agg(count(lit(1)).as("cnt")), Nil, "v", Seq("cnt")),
+      "n_orders", "sum_cents")
   }
 
   /** USER-PARTICIPATION GINI (round 16) — inequality of the per-user
@@ -3601,8 +3609,9 @@ object Relational {
     *
     * Output (one row): n_users, n_events, gini_num, gini. */
   def userActivityGini(events: DataFrame): DataFrame =
-    RankGrid.gini(events.groupBy(col("user_id")).agg(count(lit(1)).as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("cnt")), "n_users", "n_events")
+    RankGrid.gini(RankGrid.below(events.groupBy(col("user_id"))
+      .agg(count(lit(1)).as("v")).groupBy(col("v")).agg(count(lit(1)).as("cnt")),
+      Nil, "v", Seq("cnt")), "n_users", "n_events")
 
   /** MANN-WHITNEY U (round 13) — the RANK-based two-sample test next
     * to [[welchT2]]'s parametric one: robust to the heavy-tailed value

@@ -830,23 +830,49 @@ class PlanInvariantsSpec extends SparkSpec {
     }
   }
 
-  test("rank kernel: the value-grid statistics never sort a value " +
-    "column in one task — every window is partitioned or orders only " +
-    "the bucket rollup (VERDICT r20 item 7)") {
+  test("rank kernel: grids whose values grow with the data span many " +
+    "buckets and window per bucket; bounded-domain grids fit one bucket " +
+    "and sort once (VERDICT r20 item 7)") {
+    import org.apache.spark.sql.{Column, DataFrame}
     import org.apache.spark.sql.execution.window.WindowExec
-    Seq("stats_ks", "stats_ks_uniform", "stats_trimmed_mean",
-      "stats_mannwhitney", "stats_cliffs_delta", "order_gini").foreach { q =>
-      val p = withAqeOff {
-        try SparkEntry.queries(q)(spark, sf0).queryExecution.executedPlan
-        finally SparkEntry.harnessScope.release()
-      }
-      val wins = p.collect { case w: WindowExec => w }
-      assert(wins.nonEmpty, s"$q lost its rank windows")
-      wins.foreach(w => assert(w.partitionSpec.nonEmpty ||
-        w.orderSpec.forall(_.child.references
-          .forall(_.name == graft.operators.RankGrid.Bkt)),
-        s"$q sorts a value column in one task:\n$w"))
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.DecimalType
+    import graft.operators.RankGrid
+    def windows(q: String) = withAqeOff {
+      try SparkEntry.queries(q)(spark, sf0).queryExecution.executedPlan
+      finally SparkEntry.harnessScope.release()
+    }.collect { case w: WindowExec => w }
+    def ordersBy(w: WindowExec) = w.orderSpec.flatMap(_.child.references.map(_.name))
+    def cents(c: String) = (col(c).cast(DecimalType(12, 2)) * 100).cast("long")
+    def buckets(df: DataFrame, v: Column) =
+      df.select(RankGrid.bucket(v)).distinct().count()
+    // bucketed form: a rollup window orders only the bucket, and every
+    // window over the value column is partitioned
+    Seq("order_gini" -> "v", "group_quantiles" -> "v",
+      "stats_spearman" -> "y", "stats_hodges_lehmann" -> "w").foreach {
+      case (q, v) =>
+        val wins = windows(q)
+        assert(wins.exists(w => ordersBy(w) == Seq(RankGrid.Bkt)),
+          s"$q lost its bucket rollup")
+        val byV = wins.filter(w => ordersBy(w).contains(v))
+        assert(byV.nonEmpty, s"$q lost its value windows")
+        byV.foreach(w => assert(w.partitionSpec.nonEmpty,
+          s"$q sorts $v in one task:\n$w"))
     }
+    val orders = Tables.orders(spark, sf0)
+    val lineitem = Tables.lineitem(spark, sf0)
+    assert(buckets(orders, cents("o_totalprice")) > 1)
+    assert(buckets(lineitem, cents("l_extendedprice")) > 1)
+    // one-window form over grids the event value domain bounds: the
+    // whole cents grid is one bucket, so bucketing could not spread it
+    Seq("stats_ks", "stats_ks_uniform", "stats_trimmed_mean",
+      "stats_mannwhitney", "stats_cliffs_delta").foreach { q =>
+      val wins = windows(q)
+      assert(wins.nonEmpty, s"$q lost its rank windows")
+      assert(!wins.exists(w => ordersBy(w).contains(RankGrid.Bkt)),
+        s"$q took the bucketed form over a one-bucket grid")
+    }
+    assert(buckets(Tables.events(spark, sf0), cents("value")) == 1)
   }
 
   test("round-16 closing cohort: transitivity aggregates the memo edge " +

@@ -4,10 +4,10 @@ import graft.operators.RankGrid
 import org.apache.spark.sql.DataFrame
 
 /** The rank kernel against a driver-side sorted-list brute force:
-  * `below`'s strictly-less counts and `orderStats`' k-th values on
-  * grids with nulls, negatives, values over many buckets, one value, no
-  * rows, and keys that lack some values — each under 1 and 4 shuffle
-  * partitions. */
+  * `below`'s strictly-less counts and `orderStats`' k-th values, in the
+  * one-window and the bucketed form, on grids with nulls, negatives,
+  * values over many buckets, one value, no rows, and keys that lack some
+  * values — each under 1 and 4 shuffle partitions. */
 class RankGridSpec extends SparkSpec {
 
   /** One grid row: (key, value, count c, count d). */
@@ -44,9 +44,15 @@ class RankGridSpec extends SparkSpec {
     }.toSet
   }
 
-  private def gotBelow(rows: Seq[G], keyed: Boolean) =
-    RankGrid.below(frame(rows), if (keyed) Seq("g") else Nil, "v",
-        Seq("c", "d"))
+  type Below = (DataFrame, Seq[String], String, Seq[String]) => DataFrame
+  type Stats = (DataFrame, Seq[String], String, String, DataFrame) => DataFrame
+
+  private val forms: Seq[(String, Below, Stats)] = Seq(
+    ("one-window", RankGrid.below, RankGrid.orderStats),
+    ("bucketed", RankGrid.belowBucketed, RankGrid.orderStatsBucketed))
+
+  private def gotBelow(below: Below, rows: Seq[G], keyed: Boolean) =
+    below(frame(rows), if (keyed) Seq("g") else Nil, "v", Seq("c", "d"))
       .collect().map { r =>
         ((if (keyed) Option(r.getAs[String]("g")) else None,
           Option(r.getAs[java.lang.Long]("v")).map(_.longValue),
@@ -70,14 +76,13 @@ class RankGridSpec extends SparkSpec {
     }.toSet
   }
 
-  private def gotStats(rows: Seq[G], keyed: Boolean) = {
+  private def gotStats(stats: Stats, rows: Seq[G], keyed: Boolean) = {
     val s = spark
     import s.implicits._
     val rk = ranksOf(rows, keyed).map { case (g, k) => (g, s"r$k", k) }
       .toDF("g", "tag", "k")
     val ranks = if (keyed) rk else rk.drop("g")
-    RankGrid.orderStats(frame(rows), if (keyed) Seq("g") else Nil, "v", "c",
-        ranks)
+    stats(frame(rows), if (keyed) Seq("g") else Nil, "v", "c", ranks)
       .collect().map { r =>
         (if (keyed) Option(r.getAs[String]("g")) else None,
           r.getAs[String]("tag"),
@@ -86,14 +91,13 @@ class RankGridSpec extends SparkSpec {
   }
 
   private def check(name: String, rows: Seq[G], keyed: Boolean = false): Unit =
-    Seq(1, 4).foreach { parts =>
+    for ((form, below, stats) <- forms; parts <- Seq(1, 4))
       withPartitions(parts) {
-        assert(gotBelow(rows, keyed) == expectBelow(rows, keyed),
-          s"below on the $name grid, $parts partitions")
-        assert(gotStats(rows, keyed) == expectStats(rows, keyed),
-          s"orderStats on the $name grid, $parts partitions")
+        assert(gotBelow(below, rows, keyed) == expectBelow(rows, keyed),
+          s"$form below on the $name grid, $parts partitions")
+        assert(gotStats(stats, rows, keyed) == expectStats(rows, keyed),
+          s"$form orderStats on the $name grid, $parts partitions")
       }
-    }
 
   test("null values sort first, in their own bucket") {
     check("null", Seq((None, None, 3L, 1L), (None, Some(-5L), 2L, 0L),
